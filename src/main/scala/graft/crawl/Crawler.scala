@@ -42,7 +42,11 @@ object Crawler {
       // than the exact anti-join at every corpus size yet timed.
       seenShards: Option[Dataset[graft.model.SeenShard]] = None)
 
-  def initialState(seeds: Dataset[Seed], pages: DataFrame)
+  /** Round-0 state: the seeds as a robots-gated frontier (every
+    * frontier row is fetchable; see Round.run step 2) and an empty seen
+    * set. */
+  def initialState(seeds: Dataset[Seed], pages: DataFrame,
+      robots: Dataset[RobotsRule])
       (implicit spark: SparkSession): CrawlState = {
     import spark.implicits._
     // seeds get the corpus warc_ts when known, else epoch (still fetchable)
@@ -51,9 +55,9 @@ object Crawler {
       .withColumn("warc_ts",
         coalesce(col("warc_ts"), lit(new java.sql.Timestamp(0L))))
       .withColumn("depth", lit(0))
-    val frontier = Frontier.fromUrls(seeded,
+    val frontier = Frontier.robotsGate(Frontier.fromUrls(seeded,
       graft.corpus.Synth.priorityKeywords,
-      graft.corpus.Synth.excludeKeywords)
+      graft.corpus.Synth.excludeKeywords), robots)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
@@ -63,8 +67,12 @@ object Crawler {
   }
 
   /** Run rounds until the frontier drains or maxRounds; snapshot each
-    * round when a Snapshot is given. Returns the final state; results and
-    * lineage accumulate in the snapshot (or `collectResults` for tests).
+    * round when a Snapshot is given. The loop stops after the round that
+    * enqueues nothing (or fetches nothing) — it never runs a trailing
+    * round only to find the frontier empty — and a snapshot resume whose
+    * last committed round enqueued nothing runs no round at all. Returns
+    * the final state; results and lineage accumulate in the snapshot (or
+    * `collectResults` for tests).
     *
     * RETURN CONTRACT (in-memory mode, snapshot = None): the returned
     * result/lineage Datasets are the rounds' enriched CACHES, and their
@@ -120,15 +128,19 @@ object Crawler {
     import spark.implicits._
     val dict = EscoMatcher.broadcastDict(spark, dictLabels)
 
+    // a resume whose last committed round enqueued nothing is drained
+    var continue = true
     var state = startState.getOrElse(snapshot.filter(_.latest() >= 0) match {
       case Some(s) =>
         val r = s.latest()
+        val counters = s.counters(r)
+        continue = counters.getOrElse("new_links", 1L) > 0L
         CrawlState(r + 1,
           s.read(r, "frontier").as[FrontierEntry],
           s.read(r, "seen"),
-          s.counters(r).getOrElse("total_fetched", 0L))
+          counters.getOrElse("total_fetched", 0L))
       case None =>
-        val s0 = initialState(seeds, pages)
+        val s0 = initialState(seeds, pages, robots)
         // checkpoint the seed frontier like every later round's: its
         // plan embeds a seeds ⋈ pages join, and round 0 otherwise
         // re-executes that corpus scan in every plan that references
@@ -151,19 +163,23 @@ object Crawler {
       lineageSlices += s.read(r, "lineage").as[Lineage]
     }
 
-    val roundLog = sys.env.get("GRAFT_ROUND_LOG").contains("1")
-    var continue = true
     while (continue && state.round < maxRounds) {
       val t0 = System.nanoTime()
       // first Bloom round (fresh start OR snapshot resume): shards are
       // built once from the full seen set here, then grown incrementally
-      // per round below — never rebuilt from scratch again
+      // per round below — never rebuilt from scratch again. The Bloom
+      // build is the per-round growth step from no shards (bit-identical
+      // to BloomShard.build, FiltersSpec): 8 bytes shuffled per hash,
+      // where build's map-side combine shuffles up to one partial bitset
+      // per shard and map task, and no second code path to warm up.
       if (bloomPrefilter && state.seenShards.isEmpty)
         state = state.copy(seenShards = Some(
           (if (cuckooSeen)
             graft.seen.CuckooShard.build(state.seenHashes, cuckooParams)
               .toDF().as[graft.model.SeenShard]
-          else graft.seen.BloomShard.build(state.seenHashes, bloomParams))
+          else graft.seen.BloomShard.grow(
+            spark.emptyDataset[graft.model.SeenShard], state.seenHashes,
+            bloomParams))
             .localCheckpoint(true)))
       val probeParams =
         if (cuckooSeen) cuckooParams.probeParams else bloomParams
@@ -197,12 +213,16 @@ object Crawler {
         // 10^10-frontier scale the co-partitioned Bloom shards carry the
         // prefilter and this exact set lives in an Iceberg table updated
         // by appending the round's slice instead.
-        val newSeen = state.seenHashes
+        //
+        // Snapshot mode writes this union straight to the snapshot and
+        // the next state re-reads it from parquet, so it is materialized
+        // once, by the write; only the in-memory path checkpoints it.
+        val seenUnion = state.seenHashes
           .unionByName(slice.select("url_hash").toDF())
           .coalesce(spark.sparkContext.defaultParallelism)
-          .localCheckpoint(true)
-        // incremental shard growth: OR the round slice's shards into the
-        // running set (see CrawlState.seenShards) — O(slice), not O(seen).
+        // incremental shard growth: OR the round slice's hashes into the
+        // running set (see CrawlState.seenShards) — O(slice), not O(seen),
+        // one cogroup of the previous shards with the slice's hashes.
         // Cuckoo backend: insertAll (insertion isn't associative like
         // Bloom's OR, so the slice cogroups into the shard table instead)
         val newShards = state.seenShards.map(prev =>
@@ -210,19 +230,20 @@ object Crawler {
             graft.seen.CuckooShard.insertAll(prev,
               slice.select("url_hash").toDF(), cuckooParams)
               .toDF().as[graft.model.SeenShard]
-          else graft.seen.BloomShard.union(prev,
-            graft.seen.BloomShard.build(
-              slice.select("url_hash").toDF(), bloomParams)))
+          else graft.seen.BloomShard.grow(prev,
+            slice.select("url_hash").toDF(), bloomParams))
             .localCheckpoint(true))
         val newTotal = state.totalFetched + out.fetchedCount
         // materialize the next frontier ONCE (it feeds every join of the
-        // next round) — the LAZY checkpoint is triggered by the count()
+        // next round) — the LAZY checkpoint is triggered by the count
         // below, so materialization + counting is a single job (an eager
-        // checkpoint ran one job and the count a second). new_links =
-        // entries enqueued for the next round (discovered + deferred +
-        // retries), recorded on the lowest-numbered partition's row.
+        // checkpoint ran one job and the count a second). The count runs
+        // on the checkpoint's rows directly: `Dataset.count` would plan a
+        // partial-count exchange, one more job. new_links = entries
+        // enqueued for the next round (discovered + deferred + retries),
+        // recorded on the lowest-numbered partition's row.
         val fr = out.nextFrontier.toDF().localCheckpoint(false)
-        val enqueued = fr.count()
+        val enqueued = fr.queryExecution.toRdd.count()
         val patchedLineage = {
           val rows = out.lineage.collect() // LocalRelation — driver-local
           val minP = rows.map(_.partition_id).min
@@ -238,7 +259,7 @@ object Crawler {
             // volume per round is O(slice), not O(total); frontier and
             // seen are full-state replacements like Iceberg overwrites
             s.write(state.round,
-              tables = Map("frontier" -> fr, "seen" -> newSeen),
+              tables = Map("frontier" -> fr, "seen" -> seenUnion),
               counters = Map("total_fetched" -> newTotal,
                 "round_fetched" -> out.fetchedCount,
                 "new_links" -> enqueued),
@@ -251,11 +272,14 @@ object Crawler {
             state = CrawlState(state.round + 1,
               s.read(state.round, "frontier").as[FrontierEntry],
               s.read(state.round, "seen"), newTotal, newShards)
+            // the state re-reads the committed frontier: the checkpoint
+            // that fed the write is dead
+            graft.util.Checkpoints.release(fr)
           case None =>
             if (retainResults) resultSlices += slice
             lineageSlices += patchedLineage
             state = CrawlState(state.round + 1, fr.as[FrontierEntry],
-              newSeen, newTotal, newShards)
+              seenUnion.localCheckpoint(true), newTotal, newShards)
         }
         // the superseded round inputs (old frontier / seen / shards) are
         // fully consumed above — release their checkpoint blocks NOW:
@@ -275,7 +299,8 @@ object Crawler {
         // between reps; specs run at fixture scale)
         out.release()
         if (snapshot.isDefined || !retainResults) out.releaseResults()
-        if (roundLog) System.err.println(
+        continue = enqueued > 0L
+        if (Round.roundLog) System.err.println(
           f"[crawl] round ${state.round - 1}%3d fetched=${out.fetchedCount}%7d " +
           f"total=${state.totalFetched}%8d secs=${(System.nanoTime() - t0) / 1e9}%7.2f " +
           f"matchCalls=${graft.extract.EscoMatcher.callCount.sumThenReset()}%8d " +

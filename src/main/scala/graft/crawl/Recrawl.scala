@@ -68,15 +68,16 @@ object Recrawl {
       .localCheckpoint(true)
 
     // re-enqueue expired urls at their original depth with the corpus
-    // warc_ts (same shaping as Crawler.initialState gives seeds)
-    val requeue = Frontier.fromUrls(
+    // warc_ts (same shaping and robots gate as Crawler.initialState gives
+    // seeds: every frontier row is fetchable)
+    val requeue = Frontier.robotsGate(Frontier.fromUrls(
       expired
         .join(pages.select(col("url"), col("warc_ts")), Seq("url"), "left")
         .withColumn("warc_ts",
           coalesce(col("warc_ts"), lit(new java.sql.Timestamp(0L))))
         .select(col("url"), col("warc_ts"), col("depth")),
       graft.corpus.Synth.priorityKeywords,
-      graft.corpus.Synth.excludeKeywords)
+      graft.corpus.Synth.excludeKeywords), robots)
       .toDF().localCheckpoint(true).as[FrontierEntry]
 
     val shards =

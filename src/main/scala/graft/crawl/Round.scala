@@ -1,5 +1,6 @@
 package graft.crawl
 
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,18 +17,41 @@ import graft.url.Canonical
   * 103-170 — fetch, gate, pipeline, link scrape, dedup, enqueue) but
   * set-at-a-time:
   *
-  *   frontier ──anti-join──> unseen ──robots/exclude──> gated
-  *     ──window(host budget)──> selected ──join pages──> fetched
-  *     ──TextExtract+EscoMatcher──> results
-  *   fetched.html ──links──explode──canonicalize──same-host──> candidates
+  *   frontier ──anti-join──> unseen ──window(host budget)──> selected
+  *     ──join pages──> fetched ──TextExtract+EscoMatcher──> results
+  *   fetched.html ──links──explode──canonicalize──same-host
+  *     ──exclude/robots──> candidates
   *     ──anti-join(seen ∪ selected)──> new frontier entries
   *
-  * Shuffle census per round: the budget window (partition by host), the
-  * fetch join (frontier ⋈ pages on url — both sides can be bucketed by
-  * url_hash at scale), and the two anti-joins (hash-partitioned on
-  * url_hash; Bloom shards prefilter map-side so the exact anti-join only
-  * sees Bloom-positive survivors). Dimension tables (robots, budgets,
-  * ESCO dict) are broadcast.
+  * Every frontier row is fetchable: robots and exclude keywords are
+  * gated where rows are created (seeds, candidates, Recrawl's requeue),
+  * so the round joins the robots rules once, for the budgets, and a
+  * frontier of only disallowed links never exists to cost a round.
+  *
+  * Job census of a steady snapshot-mode round with the co-partitioned
+  * Bloom seen set — 23 Spark jobs on the CrawlerSpec fixture, where its
+  * CI guard pins that bound (30 before the zero-job snapshot reads,
+  * one-pass seen commit and exchange-free lineage). Under AQE each query
+  * stage is one job:
+  *
+  *  - the round action, `lineageOf(results).collect` (11): the Bloom
+  *    cogroup's frontier and shard exchanges and the flagged-frontier
+  *    cache; the verify anti-join's seen broadcast, the budgets
+  *    broadcast, the host-window exchange and the ranked-frontier cache;
+  *    the selected-set broadcast and the enriched cache (the corpus is
+  *    never shuffled); the collect itself — the lineage counters are a
+  *    narrow pass over the enriched cache;
+  *  - Crawler, shard growth (3): `BloomShard.grow`'s two cogroup
+  *    exchanges and its checkpoint;
+  *  - Crawler, next frontier (5): the candidate anti-join and merge
+  *    stages behind the frontier checkpoint (4) and the enqueue count
+  *    over the checkpoint (1);
+  *  - Snapshot.write (4): frontier, seen, results slice and lineage
+  *    slice, written concurrently; the read-back is free (the manifest
+  *    carries the schemas).
+  *
+  * Dimension tables (robots, budgets, ESCO dict) and the budget-bounded
+  * selected set are broadcast.
   */
 object Round {
 
@@ -115,10 +139,12 @@ object Round {
       .select(Frontier.Cols.map(col): _*)
       .as[FrontierEntry]
 
-    // 2. robots + politeness budget selection
-    val gated = Frontier.robotsGate(unseen, robots)
+    // 2. politeness budget selection. Robots are gated where frontier
+    //    rows are created (seeds, the candidates below, Recrawl's
+    //    requeue), so every frontier row is fetchable and the round joins
+    //    the rules once, for the budgets.
     val (selected, deferred, rankedCache) =
-      Frontier.selectRound(gated, robots, roundMs)
+      Frontier.selectRound(unseen, robots, roundMs)
 
     // 3. "fetch" = join the corpus (the synthesized pages table IS the
     //    web; SURVEY.md S1). Misses (dangling links) retry up to the cap.
@@ -168,10 +194,9 @@ object Round {
       else pages.alias("p")
         .join(broadcast(sel), col("f.url") === col("p.url")))
       .transform { df =>
-        if (sys.env.get("GRAFT_PLAN_LOG").contains("1")) System.err.println(
+        if (planLog) System.err.println(
           s"[plan round $roundNo] fetch join:\n" +
-          df.queryExecution.sparkPlan.toString.take(
-            sys.env.get("GRAFT_PLAN_FULL").fold(2000)(_ => 20000)))
+          df.queryExecution.sparkPlan.toString.take(planLimit))
         df
       }
       // column discipline: the corpus `text` column is NOT selected —
@@ -208,7 +233,7 @@ object Round {
         col("sig._2").as("minhash"), col("sig._3").as("lang_pred"),
         col("sig._4").as("n_tokens"))
       .as[CrawlResult]
-    if (sys.env.get("GRAFT_PLAN_LOG").contains("1")) {
+    if (planLog) {
       val p = results.queryExecution.executedPlan.toString
       System.err.println(s"[plan round $roundNo] results UDF counts: " +
         Seq("UDF", "extract", "matchUris", "anonfun").map(k =>
@@ -221,26 +246,13 @@ object Round {
     // materializing action: it populates the results cache, yields
     // fetchedCount for free (no separate count() job), and returns the
     // lineage as a LocalRelation with no plan tie to the caches below.
-    val lineageRows = results.toDF()
-      .withColumn("partition_id", spark_partition_id())
-      .groupBy(col("partition_id"))
-      .agg(count(lit(1)).as("fetch_count"),
-        sum(when(length(col("text")) > 0, 1).otherwise(0)).as("extract_count"),
-        sum(size(col("skill_uris"))).as("skill_hits"))
-      .withColumn("round", lit(roundNo))
-      // Crawler patches new_links (next-round enqueue count, known only
-      // after the frontier materializes) onto the lowest-partition row
-      .withColumn("new_links", lit(0L))
-      .select("round", "partition_id", "fetch_count", "extract_count",
-        "new_links", "skill_hits")
-      .as[Lineage]
-      .collect()
+    val lineageRows = lineageOf(results.toDF(), roundNo).collect()
     val lineage = spark.createDataset(lineageRows.toSeq)
     val fetchedCount = lineageRows.map(_.fetch_count).sum
-    if (sys.env.get("GRAFT_ROUND_LOG").contains("1")) System.err.println(
+    if (roundLog) System.err.println(
       f"[round $roundNo%3d] fetch+extract action: " +
       f"${(System.nanoTime() - tRoundStart) / 1e9}%7.2f s")
-    if (sys.env.get("GRAFT_PLAN_LOG").contains("1")) System.err.println(
+    if (planLog) System.err.println(
       s"[plan round $roundNo] results EXECUTED:\n" +
       results.queryExecution.executedPlan.toString
         .split("== Initial Plan ==").head.take(6000))
@@ -261,8 +273,9 @@ object Round {
     // one fused anti-join against (seen ∪ this round's fetches) — two
     // separate anti-joins would shuffle the candidate set twice; the
     // union side is hash-partitioned once instead
-    val candidates = Frontier.fromUrls(rawLinks,
-        Synthesized.priorityKeywords, Synthesized.excludeKeywords)
+    val candidates = Frontier.robotsGate(Frontier.fromUrls(rawLinks,
+        Synthesized.priorityKeywords, Synthesized.excludeKeywords), robots)
+      .toDF()
       .join(seenHashes.unionByName(results.select("url_hash").toDF()),
         Seq("url_hash"), "left_anti")
       .select(Frontier.Cols.map(col): _*)
@@ -275,6 +288,39 @@ object Round {
     Output(results, nextFrontier, results.select("url_hash").toDF(),
       lineage, fetchedCount, rankedCache +: bloomScratch.toSeq, enriched)
   }
+
+  /** Per-partition lineage counters of a round's results, one row per
+    * non-empty partition (`partition_id` = `spark_partition_id()` of
+    * `results`). A narrow `mapPartitions` pass — no exchange and no job
+    * of its own — so its `collect` stays the round's single action, the
+    * one that fills the enriched cache. `new_links` is 0 here;
+    * the Crawler patches the next-round enqueue count, known only after
+    * the frontier materializes, onto the lowest-partition row. */
+  private def lineageOf(results: DataFrame, roundNo: Int)
+      (implicit spark: SparkSession): Dataset[Lineage] = {
+    import spark.implicits._
+    results
+      .select(when(length(col("text")) > 0, 1).otherwise(0),
+        size(col("skill_uris")))
+      .mapPartitions { rows =>
+        var fetched, extracted, hits = 0L
+        rows.foreach { r =>
+          fetched += 1
+          extracted += r.getInt(0)
+          if (!r.isNullAt(1)) hits += r.getInt(1)
+        }
+        if (fetched == 0L) Iterator.empty
+        else Iterator.single(Lineage(roundNo, TaskContext.getPartitionId(),
+          fetched, extracted, 0L, hits))
+      }
+  }
+
+  /** Diagnostics switches, read once per JVM: `GRAFT_ROUND_LOG=1` prints
+    * per-round timings, `GRAFT_PLAN_LOG=1` the round's physical plans
+    * (`GRAFT_PLAN_FULL` set raises the fetch-join print limit). */
+  private[crawl] val roundLog = sys.env.get("GRAFT_ROUND_LOG").contains("1")
+  private val planLog = sys.env.get("GRAFT_PLAN_LOG").contains("1")
+  private val planLimit = sys.env.get("GRAFT_PLAN_FULL").fold(2000)(_ => 20000)
 
   /** Keyword lists used for candidate scoring — the corpus generator and
     * the engine share these gates (apify.js:12-30 analogs). */

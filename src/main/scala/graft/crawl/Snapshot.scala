@@ -2,7 +2,11 @@ package graft.crawl
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 /** Snapshot/manifest layer — Iceberg-emulation (SURVEY.md §7.0).
@@ -14,7 +18,8 @@ import scala.jdk.CollectionConverters._
   *
   *   {base}/round=N/{frontier,seen,results,lineage}/  (parquet dirs)
   *   {base}/manifest_N.json
-  *     {"round":N,"tables":{...},"appends":{...},"counters":{...}}
+  *     {"round":N,"tables":{...},"appends":{...},"schemas":{...},
+  *      "counters":{...}}
   *
   * Two table kinds, mirroring Iceberg's overwrite vs append commits:
   *
@@ -27,6 +32,14 @@ import scala.jdk.CollectionConverters._
   *    not O(total) — round N no longer rewrites all N slices, which at
   *    10^10-frontier scale was the one write-amplification hot spot in
   *    the layer that exists to emulate Iceberg appends.
+  *
+  * `schemas` maps every readable table (this round's and the carried
+  * appended ones) to its Spark schema JSON, made nullable exactly as
+  * parquet schema inference returns it. `read`/`readSlice` hand it to
+  * `spark.read.schema(...)`, so a read launches no Spark job (an
+  * inferring parquet read runs a one-task footer job per call — four per
+  * committed round plus four per resume). Manifests without the node
+  * fall back to inference.
   *
   * `latest()` finds the highest committed manifest; a crash mid-round
   * leaves no manifest, so resume restarts that round from the previous
@@ -47,17 +60,24 @@ final class Snapshot(base: String)(implicit spark: SparkSession) {
   def write(round: Int, tables: Map[String, DataFrame],
       counters: Map[String, Long],
       appends: Map[String, DataFrame] = Map.empty): Unit = {
+    require(tables.keySet.intersect(appends.keySet).isEmpty,
+      s"a table is both replaced and appended: ${tables.keySet & appends.keySet}")
     Files.createDirectories(Paths.get(base))
-    tables.foreach { case (name, df) =>
-      df.write.mode(SaveMode.Overwrite).parquet(dir(round, name))
+    // the tables are independent: write them concurrently so their fixed
+    // per-write costs (job launch, output commit) overlap. One new thread
+    // per write inherits the caller's Spark local properties; every write
+    // finishes before a failure is rethrown or the manifest commits.
+    val writes = (tables ++ appends).toSeq.map { case (name, df) =>
+      Future(df.write.mode(SaveMode.Overwrite).parquet(dir(round, name)))(
+        Snapshot.threadPerTask)
     }
-    appends.foreach { case (name, df) =>
-      df.write.mode(SaveMode.Overwrite).parquet(dir(round, name))
-    }
-    val prevAppends: Map[String, Seq[String]] = {
-      val prev = latest()
-      if (prev < 0 || prev >= round) Map.empty else appendPaths(prev)
-    }
+    writes.foreach(Await.ready(_, Duration.Inf))
+    writes.foreach(_.value.get.get)
+    val prev = latest()
+    val (prevAppends, prevSchemas) =
+      if (prev < 0 || prev >= round) (Map.empty[String, Seq[String]],
+        Map.empty[String, StructType])
+      else (appendPaths(prev), schemas(prev))
     val allAppends = (prevAppends.keySet ++ appends.keySet).map { n =>
       n -> (prevAppends.getOrElse(n, Nil) ++
         (if (appends.contains(n)) Seq(dir(round, n)) else Nil))
@@ -74,6 +94,13 @@ final class Snapshot(base: String)(implicit spark: SparkSession) {
     allAppends.toSeq.sortBy(_._1).foreach { case (n, ps) =>
       val arr = aNode.putArray(n); ps.foreach(arr.add)
     }
+    val sNode = root.putObject("schemas")
+    (prevSchemas.filter { case (n, _) => allAppends.contains(n) } ++
+        (tables ++ appends).map { case (n, df) =>
+          n -> org.apache.spark.SparkInternals.asNullable(df.schema) })
+      .toSeq.sortBy(_._1).foreach { case (n, st) =>
+        sNode.set[JsonNode](n, Snapshot.mapper.readTree(st.json))
+      }
     val cNode = root.putObject("counters")
     counters.toSeq.sortBy(_._1).foreach { case (k, v) => cNode.put(k, v) }
     val json = Snapshot.mapper.writeValueAsString(root)
@@ -96,11 +123,11 @@ final class Snapshot(base: String)(implicit spark: SparkSession) {
       .foldLeft(-1)(math.max)
   }
 
-  private def manifest(round: Int): com.fasterxml.jackson.databind.JsonNode =
+  private def manifest(round: Int): JsonNode =
     Snapshot.mapper.readTree(Files.readAllBytes(manifestPath(round)))
 
-  private def fields(node: com.fasterxml.jackson.databind.JsonNode)
-      : Iterator[(String, com.fasterxml.jackson.databind.JsonNode)] =
+  private def fields(node: JsonNode)
+      : Iterator[(String, JsonNode)] =
     node.properties().iterator().asScala.map(e => e.getKey -> e.getValue)
 
   /** Slice-path lists of the appended tables at a given round. */
@@ -109,19 +136,30 @@ final class Snapshot(base: String)(implicit spark: SparkSession) {
       name -> arr.elements().asScala.map(_.asText()).toSeq
     }.toMap
 
+  /** Table schemas recorded at a round (empty for manifests written
+    * before the `schemas` node existed). */
+  private def schemas(round: Int): Map[String, StructType] =
+    fields(manifest(round).path("schemas")).map { case (name, node) =>
+      name -> DataType.fromJson(node.toString).asInstanceOf[StructType]
+    }.toMap
+
+  private def parquet(round: Int, table: String, paths: Seq[String])
+      : DataFrame =
+    schemas(round).get(table)
+      .fold(spark.read)(spark.read.schema)
+      .parquet(paths: _*)
+
   /** Read a table at a round: appended tables union all their committed
     * slices; replaced tables read the round's dir. */
-  def read(round: Int, table: String): DataFrame = {
-    val ap = appendPaths(round)
-    ap.get(table) match {
-      case Some(paths) if paths.nonEmpty => spark.read.parquet(paths: _*)
-      case _ => spark.read.parquet(dir(round, table))
+  def read(round: Int, table: String): DataFrame =
+    appendPaths(round).get(table) match {
+      case Some(paths) if paths.nonEmpty => parquet(round, table, paths)
+      case _ => parquet(round, table, Seq(dir(round, table)))
     }
-  }
 
   /** Read ONLY the slice a given round appended to a table. */
   def readSlice(round: Int, table: String): DataFrame =
-    spark.read.parquet(dir(round, table))
+    parquet(round, table, Seq(dir(round, table)))
 
   def counters(round: Int): Map[String, Long] =
     fields(manifest(round).path("counters"))
@@ -130,4 +168,7 @@ final class Snapshot(base: String)(implicit spark: SparkSession) {
 
 object Snapshot {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private val threadPerTask: ExecutionContext =
+    ExecutionContext.fromExecutor((r: Runnable) => new Thread(r).start())
 }

@@ -74,7 +74,11 @@ object Frontier {
 
   /** Robots gate: drop URLs whose path starts with a disallowed prefix for
     * their host. Rules are small (one row per host) → broadcast join.
-    * North-rule addition; absent in the reference (SURVEY.md C10). */
+    * North-rule addition; absent in the reference (SURVEY.md C10).
+    *
+    * The crawl applies it where frontier rows are created (seeds, link
+    * candidates, Recrawl's requeue), so a frontier holds only fetchable
+    * rows and `selectRound` is the round's only join with the rules. */
   def robotsGate(frontier: Dataset[FrontierEntry],
       robots: Dataset[RobotsRule])
       (implicit spark: SparkSession): Dataset[FrontierEntry] = {

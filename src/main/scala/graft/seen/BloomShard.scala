@@ -136,6 +136,31 @@ object BloomShard {
     }.map(_._2)
   }
 
+  /** Grow shards by a batch of hashes (the crawl loop's per-round
+    * step): one cogroup of `prev` with the hashes keyed by `shard_id`
+    * that ORs each shard's new bits in. Equal to
+    * `union(prev, build(hashes, p))` bit for bit (FiltersSpec), with one
+    * shuffle of 8-byte hashes in place of build's partial-bitset shuffle
+    * chained into union's merge shuffle. */
+  def grow(prev: Dataset[SeenShard], hashes: DataFrame,
+      p: Params = testParams)
+      (implicit spark: SparkSession): Dataset[SeenShard] = {
+    import spark.implicits._
+    val Params(n, m, k) = p
+    val keyed = hashes.select(col("url_hash").as[Long])
+      .groupByKey(h => shardOf(h, n))
+    prev.groupByKey(_.shard_id).cogroup(keyed) { (sid, shards, hs) =>
+      val bits = new Array[Long](m >>> 6)
+      shards.foreach { s =>
+        val b = fromBytes(s.bits)
+        var i = 0
+        while (i < bits.length) { bits(i) |= b(i); i += 1 }
+      }
+      hs.foreach(h => setBits(bits, h, m, k))
+      Iterator.single(SeenShard(sid, "bloom", toBytes(bits)))
+    }
+  }
+
   /** Per-shard probe closure, dispatched on `SeenShard.kind`: "bloom"
     * probes the bitset with this object's double-hashing scheme (m/k
     * from `p`); "cuckoo" deserializes the self-describing

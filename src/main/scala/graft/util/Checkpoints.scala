@@ -40,7 +40,10 @@ object Checkpoints {
   def release(df: Dataset[_]): Unit = {
     val analyzed = df.queryExecution.analyzed
     strip(analyzed) match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      // not r.rdd.unpersist: that logs a "locally checkpointed … cannot
+      // be recomputed" WARN per call, and dropping the lineage-truncated
+      // blocks is exactly the point here
+      case r: LogicalRDD => org.apache.spark.SparkInternals.freeBlocks(r.rdd)
       case other =>
         val embedded = other.collect { case r: LogicalRDD => r }
         require(embedded.isEmpty,

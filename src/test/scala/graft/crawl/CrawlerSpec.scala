@@ -21,6 +21,27 @@ class CrawlerSpec extends SparkSpec {
   private lazy val full = Crawler.crawl(pages, robots, seeds, dictLabels,
     maxRounds = 40, roundMs = 4000L)(spark)
 
+  /** Spark jobs a steady round (any round after the first) of the
+    * snapshot + co-partitioned-Bloom crawl below may run: 23, measured
+    * at 1 and 4 cores on this fixture. */
+  private val JobsPerSteadyRound = 23
+
+  /** A snapshot + co-partitioned-Bloom crawl into a fresh directory:
+    * its snapshot, final state and the Spark jobs it ran (the corpus
+    * cache is built first, outside the count). */
+  private def durable(maxRounds: Int) = {
+    pages.count()
+    val snap = new Snapshot(
+      Files.createTempDirectory("graft-durable").toString)(spark)
+    val (state, jobs) = jobsOf(Crawler.crawl(pages, robots, seeds,
+      dictLabels, maxRounds = maxRounds, roundMs = 4000L,
+      snapshot = Some(snap), bloomPrefilter = true, bloomCopartition = true,
+      retainResults = false)(spark)._1)
+    (snap, state, jobs)
+  }
+
+  private lazy val drained = durable(40)
+
   test("crawl drains the frontier and fetches pages") {
     val (state, results, lineage) = full
     assert(state.totalFetched > 0)
@@ -259,5 +280,68 @@ class CrawlerSpec extends SparkSpec {
       lineage.agg(sum("fetch_count")).head.getLong(0))
     assert(r2.count() === 0L)
     assert(results.count() === state.totalFetched)
+  }
+
+  test("no committed frontier holds a robots-disallowed or excluded url") {
+    val (snap, state, _) = drained
+    val rules = robots.collect().map(r => r.host -> r.disallow_prefixes).toMap
+    // the corpus does link to disallowed pages: the gate has work to do
+    assert(pages.filter(col("url").contains("/private/")).count() > 0)
+    assert(snap.latest() === state.round - 1)
+    (0 to snap.latest()).foreach { r =>
+      snap.read(r, "frontier").select("url", "host").collect().foreach { row =>
+        val (url, host) = (row.getString(0), row.getString(1))
+        val path = url.replaceFirst("^https?://[^/]*", "")
+        assert(!rules.getOrElse(host, Nil).exists(path.startsWith),
+          s"round $r frontier holds robots-disallowed $url")
+        assert(!Synth.excludeKeywords.exists(url.toLowerCase.contains),
+          s"round $r frontier holds excluded $url")
+      }
+    }
+  }
+
+  test("lineage counters equal the former groupBy(spark_partition_id) " +
+      "form on the fixture") {
+    import graft.extract.EscoMatcher
+    import spark.implicits._
+    val dict = EscoMatcher.broadcastDict(spark, dictLabels)
+    var state = Crawler.initialState(seeds, pages, robots)(spark)
+    (0 until 3).foreach { r =>
+      val out = Round.run(pages, robots, state.frontier, state.seenHashes,
+        dict, r, 4000L)(spark)
+      val former = out.results.toDF()
+        .withColumn("partition_id", spark_partition_id())
+        .groupBy(col("partition_id"))
+        .agg(count(lit(1)), sum(when(length(col("text")) > 0, 1).otherwise(0)),
+          sum(size(col("skill_uris"))))
+        .collect()
+        .map(x => (r, x.getInt(0), x.getLong(1), x.getLong(2), x.getLong(3)))
+      val got = out.lineage.collect().map(l =>
+        (l.round, l.partition_id, l.fetch_count, l.extract_count, l.skill_hits))
+      assert(got.sorted.toSeq === former.sorted.toSeq, s"round $r")
+      assert(out.lineage.collect().forall(_.new_links == 0L))
+      state = Crawler.CrawlState(r + 1,
+        out.nextFrontier.toDF().localCheckpoint(true)
+          .as[graft.model.FrontierEntry],
+        state.seenHashes.unionByName(out.newSeenHashes).localCheckpoint(true),
+        state.totalFetched + out.fetchedCount)
+      out.release(); out.releaseResults()
+    }
+  }
+
+  test("CI guard: a draining snapshot + co-partitioned-Bloom crawl runs " +
+      "no trailing empty round and stays under the per-round job bound") {
+    val (_, state, jobs) = drained
+    val k = state.round
+    assert(k > 2)
+    val (_, capped, cappedJobs) = durable(k)
+    assert(capped.totalFetched === state.totalFetched)
+    assert(jobs === cappedJobs,
+      s"draining crawl ran $jobs jobs, the same crawl capped at $k rounds " +
+        s"$cappedJobs: the drain ran a trailing empty round")
+    val (_, _, firstJobs) = durable(1)
+    val perRound = (cappedJobs - firstJobs).toDouble / (k - 1)
+    assert(perRound <= JobsPerSteadyRound,
+      f"$perRound%.1f jobs per steady round, bound $JobsPerSteadyRound")
   }
 }

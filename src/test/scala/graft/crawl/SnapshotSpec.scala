@@ -52,4 +52,41 @@ class SnapshotSpec extends SparkSpec {
     assert(snap.read(0, "results").count() === 3) // round-0 view unchanged
     assert(snap.counters(1) === Map("round_fetched" -> 4L))
   }
+
+  test("read/readSlice launch no Spark job and match an inferring read " +
+      "row for row and schema for schema") {
+    import spark.implicits._
+    val base = tmpDir()
+    val snap = new Snapshot(base)
+    // non-nullable primitives, arrays of non-null elements, a timestamp:
+    // the manifest schema must come back nullable exactly as inferred
+    def slice(round: Int) = Seq(
+      graft.model.CrawlResult(s"https://a.edu/$round", round.toLong, "a.edu",
+        round, 1, "text", "en", Seq("u1", "u2"), Seq("l1"), 7L,
+        Seq(1L, 2L), "en", 3),
+      graft.model.CrawlResult(s"https://b.edu/$round", 10L + round, "b.edu",
+        round, 2, "", "de", Nil, Nil, -1L, Nil, "de", 0)).toDS().toDF()
+    val frontier = Seq(graft.model.FrontierEntry("https://a.edu/x", 5L,
+      "a.edu", 1, new java.sql.Timestamp(1000L), 2, 0)).toDS().toDF()
+    snap.write(0, tables = Map("frontier" -> frontier),
+      counters = Map.empty, appends = Map("results" -> slice(0)))
+    snap.write(1, tables = Map("frontier" -> frontier),
+      counters = Map.empty, appends = Map("results" -> slice(1)))
+    def same(got: org.apache.spark.sql.DataFrame, paths: String*) = {
+      val want = spark.read.parquet(paths: _*)
+      assert(got.schema === want.schema)
+      assert(got.collect().map(_.toString).sorted ===
+        want.collect().map(_.toString).sorted)
+    }
+    val (reads, jobs) = jobsOf(Seq(snap.read(1, "results"),
+      snap.readSlice(1, "results"), snap.read(1, "frontier"),
+      snap.read(0, "results")))
+    assert(jobs === 0)
+    same(reads(0), s"$base/round=0/results", s"$base/round=1/results")
+    same(reads(1), s"$base/round=1/results")
+    same(reads(2), s"$base/round=1/frontier")
+    same(reads(3), s"$base/round=0/results")
+    // the listener does see an inferring read's footer job
+    assert(jobsOf(spark.read.parquet(s"$base/round=1/results"))._2 > 0)
+  }
 }

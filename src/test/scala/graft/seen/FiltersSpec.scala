@@ -86,6 +86,35 @@ class FiltersSpec extends AnyFunSuite {
     assert(incBits === batchBits) // identical bitsets, not just members
   }
 
+  test("bloom: one-cogroup grow ≡ union(prev, build(hashes)) bit for " +
+      "bit, for empty and non-empty prev") {
+    implicit val spark: org.apache.spark.sql.SparkSession =
+      graft.SparkSpec.session
+    import org.scalacheck.{Gen, Prop, Test}
+    import spark.implicits._
+    def bits(ds: org.apache.spark.sql.Dataset[graft.model.SeenShard]) =
+      ds.collect().map(s => s.shard_id -> (s.kind, s.bits.toSeq)).toMap
+    for (prevGen <- Seq(Gen.const(List.empty[Long]),
+        Gen.nonEmptyListOf(Gen.long))) {
+      val cases = for {
+        shards <- Gen.choose(1, 8)
+        words <- Gen.choose(1, 16)
+        k <- Gen.choose(1, 7)
+        prev <- prevGen
+        next <- Gen.listOf(Gen.long)
+      } yield (BloomShard.Params(shards, words * 64, k), prev, next)
+      val prop = Prop.forAll(cases) { case (p, prev, next) =>
+        val old = BloomShard.build(prev.toDF("url_hash"), p)
+        val hashes = next.toDF("url_hash")
+        bits(BloomShard.grow(old, hashes, p)) ==
+          bits(BloomShard.union(old, BloomShard.build(hashes, p)))
+      }
+      val res = Test.check(
+        Test.Parameters.default.withMinSuccessfulTests(8), prop)
+      assert(res.passed, res)
+    }
+  }
+
   test("bloom: no false negatives (the scale-free guarantee)") {
     val m = 1 << 16
     val k = 7

@@ -4,8 +4,53 @@ import graft.SparkSpec
 
 /** Checkpoints.release must actually free localCheckpoint storage (the
   * crawl loop relies on it to keep superseded round state from pinning
-  * blocks), and must be a no-op on non-checkpointed plans. */
+  * blocks), and must be a no-op on non-checkpointed plans. It must also
+  * do so silently: `RDD.unpersist` logs a WARN per locally checkpointed
+  * RDD, which flooded every crawl's log. */
 class CheckpointsSpec extends SparkSpec {
+
+  private val Flood = "locally checkpointed"
+
+  /** Messages logged at WARN or above while `body` runs. */
+  private def warnsDuring(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender("checkpoints-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        got.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(app, Level.WARN, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      root.removeAppender(app.getName)
+      ctx.updateLoggers()
+      app.stop()
+    }
+    got.toArray.toSeq.map(_.toString)
+  }
+
+  test("release logs no \"locally checkpointed\" WARN (RDD.unpersist does)") {
+    val loud = spark.range(10).toDF("v").localCheckpoint(true)
+    val rdds = loud.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
+    assert(warnsDuring(rdds.foreach(_.unpersist())).exists(_.contains(Flood)),
+      "the capture must see the WARN RDD.unpersist logs")
+    val quiet = spark.range(10).toDF("v").localCheckpoint(true)
+    val rddId = quiet.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.head
+    assert(!warnsDuring(Checkpoints.release(quiet)).exists(_.contains(Flood)))
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rddId))
+  }
 
   test("release frees a localCheckpoint's backing RDD storage") {
     val df = spark.range(1000).toDF("v").localCheckpoint(true)
