@@ -4,14 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.fuzzy.Ratio
+import graft.util.Tables
 
 /** Fuzzy-matching operator surface (SURVEY.md J7, W4, A8, A11, F1-F4
   * consumers) over the testdata + documents tables.
   */
 object FuzzyQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** J7: fuzzy similarity join with blocking — the reference merges
     * near-duplicate course keys when token_set_ratio ≥ 88
@@ -68,7 +66,7 @@ object FuzzyQueries {
   }
 
   val qFuzzyJoin: (SparkSession, String) => DataFrame = (s, dir) =>
-    fuzzyJoin(t(s, dir, "part"), "p_name", "p_partkey", 88)
+    fuzzyJoin(Tables.read(s, s"$dir/part.parquet"), "p_name", "p_partkey", 88)
 
   /** W4: best-match-one — keep only the single highest-scoring match per
     * query key (/root/reference/skills.py:312-324 max-by-score winner).
@@ -87,7 +85,7 @@ object FuzzyQueries {
     * candidate names are dropped up front (a null key can never beat a
     * real score; Ratio.ratio(null,·)=0). */
   val qBestMatch: (SparkSession, String) => DataFrame = (s, dir) => {
-    val p = t(s, dir, "part")
+    val p = Tables.read(s, s"$dir/part.parquet")
     val probe = p.filter(col("p_partkey") % 50 === 0)
       .select(col("p_partkey").as("probe_id"), col("p_name").as("probe"))
     val cand = p.filter(col("p_name").isNotNull)
@@ -195,11 +193,13 @@ object FuzzyQueries {
     // the (uni, course) groupBy below reuses this same exchange (the
     // broadcast joins propagate l_orderkey ≡ o_orderkey partitioning;
     // no-op at real scale; guide §2.4/§2.5, see graft.util.Scans)
-    val li = graft.util.Scans.parallelBy(t(s, dir, "lineitem"),
+    val li = graft.util.Scans.parallelBy(
+      Tables.read(s, s"$dir/lineitem.parquet"),
       col("l_orderkey"))
-    val o = t(s, dir, "orders")
-    val c = t(s, dir, "customer"); val n = t(s, dir, "nation")
-    val p = t(s, dir, "part")
+    val o = Tables.read(s, s"$dir/orders.parquet")
+    val c = Tables.read(s, s"$dir/customer.parquet")
+    val n = Tables.read(s, s"$dir/nation.parquet")
+    val p = Tables.read(s, s"$dir/part.parquet")
     li.join(o, li("l_orderkey") === o("o_orderkey"))
       // part/customer scale with SF — no static hint (AQE converts at
       // bench scale; see the broadcast-hint rule in Queries.qJoinStar)
@@ -274,7 +274,8 @@ object FuzzyQueries {
     * hits each keyword area (/root/reference/main.py:3152-3261 skill-area
     * coverage). Areas here: part-type words over each order's items. */
   val qAreaCoverage: (SparkSession, String) => DataFrame = (s, dir) => {
-    val li = t(s, dir, "lineitem"); val p = t(s, dir, "part")
+    val li = Tables.read(s, s"$dir/lineitem.parquet")
+    val p = Tables.read(s, s"$dir/part.parquet")
     val areas = Seq("steel", "brass", "copper", "nickel", "tin")
     val joined = li.join(p, li("l_partkey") === p("p_partkey")) // part scales — no hint
       .groupBy(col("l_orderkey"))
@@ -296,7 +297,8 @@ object FuzzyQueries {
     * string_agg ordered by the unique custkey (sort_array's first struct
     * field), so rows+schema+hash all gate. */
   val qNestedGroups: (SparkSession, String) => DataFrame = (s, dir) => {
-    val c = t(s, dir, "customer"); val n = t(s, dir, "nation")
+    val c = Tables.read(s, s"$dir/customer.parquet")
+    val n = Tables.read(s, s"$dir/nation.parquet")
     val freqW = Window.partitionBy(col("c_mktsegment"))
     c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .withColumn("segment_freq", count(lit(1)).over(freqW))

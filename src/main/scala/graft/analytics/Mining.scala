@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Tables
 
 /** Regex-mining scalar operators (SURVEY.md F11-F14, F16-F17): the
   * reference mines degree titles, ECTS/credit counts, years, and
@@ -11,9 +12,6 @@ import org.apache.spark.sql.functions._
   * rlike / when-chains) so they stay inside whole-stage codegen.
   */
 object Mining {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** F11: degree-title tokens — (BSc|MSc|PhD|Bachelor|Master) mentions,
     * normalized (test_pipeline.py:358-392 + cleaner.py DEGREE_TOKEN_RX
@@ -62,7 +60,7 @@ object Mining {
     * has no degree text, so the oracle exercises the mechanics:
     * extract_all, normalization transform, rlike chain, canonical key). */
   val qMining: (SparkSession, String) => DataFrame = (s, dir) =>
-    t(s, dir, "part")
+    Tables.read(s, s"$dir/part.parquet")
       .select(
         col("p_partkey"),
         array_join(transform(regexp_extract_all(col("p_name"),
@@ -78,7 +76,7 @@ object Mining {
     * "fast", …) — regexp_extract_all + slice mechanics (the ECTS/fee
     * mining shape F12 applied to a pattern this corpus contains). */
   val qDocPatterns: (SparkSession, String) => DataFrame = (s, dir) =>
-    t(s, dir, "documents")
+    Tables.read(s, s"$dir/documents.parquet")
       .select(col("doc_id"),
         size(regexp_extract_all(col("text"), lit("\\b\\w+t\\b"), lit(0)))
           .as("n_hits"),

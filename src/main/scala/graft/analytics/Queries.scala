@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Tables
 
 /** Relational operator surface (SURVEY.md §2.3-2.8) re-expressed over the
   * driver's TPC-H-ish testdata, each with a DuckDB oracle twin in
@@ -21,9 +22,6 @@ import org.apache.spark.sql.functions._
   * the shuffles are, what AQE handles.
   */
 object Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -48,9 +46,11 @@ object Queries {
     * embodiment, so "small fixed host set" did not meet this rule's own
     * bounded-by-construction bar — VERDICT r5 "what's wrong" #2.) */
   val qJoinStar: Q = (s, dir) => {
-    val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
-    val c = t(s, dir, "customer"); val n = t(s, dir, "nation")
-    val r = t(s, dir, "region")
+    val li = Tables.read(s, s"$dir/lineitem.parquet")
+    val o = Tables.read(s, s"$dir/orders.parquet")
+    val c = Tables.read(s, s"$dir/customer.parquet")
+    val n = Tables.read(s, s"$dir/nation.parquet")
+    val r = Tables.read(s, s"$dir/region.parquet")
     li.join(o, li("l_orderkey") === o("o_orderkey"))
       .join(c, o("o_custkey") === c("c_custkey"))
       .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
@@ -64,7 +64,8 @@ object Queries {
   /** J2: left join keeping order-less customers
     * (/root/reference/main.py:713-716 shape). */
   val qJoinLeft: Q = (s, dir) => {
-    val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
+    val c = Tables.read(s, s"$dir/customer.parquet")
+    val o = Tables.read(s, s"$dir/orders.parquet")
     c.join(o, c("c_custkey") === o("o_custkey"), "left")
       .groupBy(col("c_mktsegment"))
       .agg(count(col("o_orderkey")).as("n_orders"),
@@ -74,7 +75,8 @@ object Queries {
 
   /** J4: EXISTS semi-join (/root/reference/main.py:648-657). */
   val qJoinSemi: Q = (s, dir) => {
-    val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
+    val c = Tables.read(s, s"$dir/customer.parquet")
+    val o = Tables.read(s, s"$dir/orders.parquet")
     c.join(o.filter(col("o_totalprice") > 100000.0)
         .select(col("o_custkey").as("c_custkey")),
       Seq("c_custkey"), "left_semi")
@@ -84,7 +86,8 @@ object Queries {
 
   /** NOT EXISTS anti-join (frontier-minus-seen shape, SURVEY.md J10). */
   val qJoinAnti: Q = (s, dir) => {
-    val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
+    val c = Tables.read(s, s"$dir/customer.parquet")
+    val o = Tables.read(s, s"$dir/orders.parquet")
     c.join(o.select(col("o_custkey").as("c_custkey")),
       Seq("c_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
@@ -94,7 +97,8 @@ object Queries {
   /** J5-flavor: equi join + theta (<>/>) residual filter
     * (/root/reference/policy_engine.py:199-232 anti-predicate). */
   val qJoinTheta: Q = (s, dir) => {
-    val c = t(s, dir, "customer"); val sup = t(s, dir, "supplier")
+    val c = Tables.read(s, s"$dir/customer.parquet")
+    val sup = Tables.read(s, s"$dir/supplier.parquet")
     // supplier scales with SF — no static hint (auto/AQE converts at
     // bench scale; see the broadcast-hint rule at qJoinStar)
     c.join(sup, c("c_nationkey") === sup("s_nationkey"))
@@ -107,9 +111,12 @@ object Queries {
   /** J3: 6-table chain incl. two left joins
     * (/root/reference/main.py:4325-4342 theme-search join). */
   val qJoinChain6: Q = (s, dir) => {
-    val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
-    val c = t(s, dir, "customer"); val n = t(s, dir, "nation")
-    val p = t(s, dir, "part"); val sup = t(s, dir, "supplier")
+    val li = Tables.read(s, s"$dir/lineitem.parquet")
+    val o = Tables.read(s, s"$dir/orders.parquet")
+    val c = Tables.read(s, s"$dir/customer.parquet")
+    val n = Tables.read(s, s"$dir/nation.parquet")
+    val p = Tables.read(s, s"$dir/part.parquet")
+    val sup = Tables.read(s, s"$dir/supplier.parquet")
     li.join(o, li("l_orderkey") === o("o_orderkey"))
       .join(p, li("l_partkey") === p("p_partkey")) // part scales with SF — no hint
       .join(sup, li("l_suppkey") === sup("s_suppkey"), "left") // supplier scales — no hint
@@ -130,7 +137,7 @@ object Queries {
     * equal values; the exact decimal sum → nearest-double conversion is
     * IEEE-deterministic in both engines. */
   val qAggPricing: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.read(s, s"$dir/lineitem.parquet")
       .filter(col("l_shipdate") < lit("1998-09-01"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -149,7 +156,8 @@ object Queries {
 
   /** A2: two-key frequency (/root/reference/main.py:4473-4478). */
   val qAggTwoKey: Q = (s, dir) => {
-    val c = t(s, dir, "customer"); val n = t(s, dir, "nation")
+    val c = Tables.read(s, s"$dir/customer.parquet")
+    val n = Tables.read(s, s"$dir/nation.parquet")
     c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .groupBy(col("n_name"), col("c_mktsegment"))
       .agg(count(lit(1)).as("freq"))
@@ -159,7 +167,7 @@ object Queries {
   /** A4: global top-N by frequency with total tie-break
     * (Counter.most_common analog, /root/reference/main.py:3828-3838). */
   val qTopN: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.read(s, s"$dir/lineitem.parquet")
       .groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("l_partkey").asc)
@@ -168,7 +176,8 @@ object Queries {
   /** A5/A6: GROUP_CONCAT-DISTINCT analog — deterministic sorted doc per
     * group (/root/reference/main.py:4703-4708 clustering input). */
   val qGroupConcat: Q = (s, dir) => {
-    val c = t(s, dir, "customer"); val n = t(s, dir, "nation")
+    val c = Tables.read(s, s"$dir/customer.parquet")
+    val n = Tables.read(s, s"$dir/nation.parquet")
     c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(concat_ws(" ",
@@ -182,8 +191,9 @@ object Queries {
     * 1-row aggregate (the oracle's scalar subquery), NOT a separate
     * driver action — the whole query is one job. */
   val qCoverage: Q = (s, dir) => {
-    val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
-    val p = t(s, dir, "part")
+    val li = Tables.read(s, s"$dir/lineitem.parquet")
+    val o = Tables.read(s, s"$dir/orders.parquet")
+    val p = Tables.read(s, s"$dir/part.parquet")
     val totalBrands = p.select(
       countDistinct(col("p_brand")).as("total_brands"))
     li.join(o, li("l_orderkey") === o("o_orderkey"))
@@ -199,8 +209,9 @@ object Queries {
 
   /** A10: monthly trend (/root/reference/main.py:4520-4526). */
   val qMonthlyTrend: Q = (s, dir) => {
-    val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
-    val n = t(s, dir, "nation")
+    val o = Tables.read(s, s"$dir/orders.parquet")
+    val c = Tables.read(s, s"$dir/customer.parquet")
+    val n = Tables.read(s, s"$dir/nation.parquet")
     o.join(c, o("o_custkey") === c("c_custkey")) // customer scales — no hint
       .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .groupBy(col("n_name"),
@@ -211,7 +222,7 @@ object Queries {
 
   /** A9: distinct + sort (/root/reference/main.py:745-751). */
   val qDistinct: Q = (s, dir) =>
-    t(s, dir, "part").select(col("p_type")).distinct()
+    Tables.read(s, s"$dir/part.parquet").select(col("p_type")).distinct()
       .orderBy(col("p_type"))
 
   // -------------------------------------------------------------- windows
@@ -220,7 +231,7 @@ object Queries {
     * (/root/reference/skill_gap/services.py:268-292). Per-row rational
     * arithmetic → IEEE-exact in both engines. */
   val qRankScore: Q = (s, dir) => {
-    val c = t(s, dir, "customer")
+    val c = Tables.read(s, s"$dir/customer.parquet")
     val w = Window.partitionBy(col("c_nationkey"))
       .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
     val counts = Window.partitionBy(col("c_nationkey"))
@@ -235,7 +246,7 @@ object Queries {
   /** W2: demand/supply gap via full-outer alignment
     * (/root/reference/skill_gap/services.py:294-324). */
   val qGapScore: Q = (s, dir) => {
-    val o = t(s, dir, "orders")
+    val o = Tables.read(s, s"$dir/orders.parquet")
     val demand = o.filter(col("o_orderpriority") <= "2-HIGH")
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("demand"))
     val supply = o.filter(col("o_orderpriority") > "2-HIGH")
@@ -251,7 +262,7 @@ object Queries {
 
   /** W3: top-3 per group (/root/reference/skill_gap/router.py:249-281). */
   val qTopKPerGroup: Q = (s, dir) => {
-    val p = t(s, dir, "part")
+    val p = Tables.read(s, s"$dir/part.parquet")
     val w = Window.partitionBy(col("p_brand"))
       .orderBy(col("p_retailprice").desc, col("p_partkey").asc)
     p.withColumn("rn", row_number().over(w))
@@ -273,7 +284,7 @@ object Queries {
     * single-partition WindowExec over unbounded input — the input here
     * is bounded by the limit). */
   val qPagination: Q = (s, dir) => {
-    val o = t(s, dir, "orders")
+    val o = Tables.read(s, s"$dir/orders.parquet")
     val (pageStart, pageEnd) = (101, 150)
     val top = o.orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       .limit(pageEnd)
@@ -295,7 +306,7 @@ object Queries {
     * sum yields decimal(28,2) vs DuckDB's (38,2) — equal values,
     * different serialized scale → hash mismatch without the cast). */
   val qEventsRunning: Q = (s, dir) => {
-    val e = t(s, dir, "events")
+    val e = Tables.read(s, s"$dir/events.parquet")
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -314,7 +325,7 @@ object Queries {
   /** P1-P4: LIKE modes, null/empty guards, IN, numeric range
     * (/root/reference/main.py:1895-1906, 3536-3538, 3864, 2095-2104). */
   val qFilters: Q = (s, dir) =>
-    t(s, dir, "part")
+    Tables.read(s, s"$dir/part.parquet")
       .filter(lower(col("p_type")).contains("brass") ||
         lower(col("p_type")).startsWith("small"))
       .filter(col("p_brand").isNotNull && col("p_brand") =!= "")
@@ -328,7 +339,7 @@ object Queries {
   /** O1: order by score desc, tie-break asc, limit
     * (/root/reference/main.py:723-725). */
   val qOrderLimit: Q = (s, dir) =>
-    t(s, dir, "customer")
+    Tables.read(s, s"$dir/customer.parquet")
       .orderBy(col("c_acctbal").desc, col("c_name").asc)
       .limit(25)
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
@@ -336,7 +347,7 @@ object Queries {
   /** O4: set ops — customers with finished but no open orders (EXCEPT,
     * /root/reference/policy_engine.py:277-293 set-difference shape). */
   val qSetOps: Q = (s, dir) => {
-    val o = t(s, dir, "orders")
+    val o = Tables.read(s, s"$dir/orders.parquet")
     o.filter(col("o_orderstatus") === "F")
       .select(col("o_custkey")).distinct()
       .except(o.filter(col("o_orderstatus") === "O")
@@ -346,7 +357,7 @@ object Queries {
 
   /** O6: union + dedup (frontier merge shape). */
   val qUnionDedup: Q = (s, dir) => {
-    val o = t(s, dir, "orders")
+    val o = Tables.read(s, s"$dir/orders.parquet")
     val a = o.filter(col("o_orderstatus") === "F")
       .select(col("o_custkey"))
     val b = o.filter(col("o_totalprice") > 150000.0)
@@ -358,7 +369,7 @@ object Queries {
 
   /** F15/F20/O3: split/element_at, date bucketing, array sort-dedup. */
   val qScalars: Q = (s, dir) =>
-    t(s, dir, "part")
+    Tables.read(s, s"$dir/part.parquet")
       .select(
         col("p_partkey"),
         element_at(split(col("p_type"), " "), -1).as("type_last_word"),
@@ -370,7 +381,7 @@ object Queries {
   /** F18: token-set Jaccard between two string columns
     * (/root/reference/output.py:13-17). Integer ratio → exact. */
   val qJaccard: Q = (s, dir) =>
-    t(s, dir, "part")
+    Tables.read(s, s"$dir/part.parquet")
       .withColumn("ta", array_distinct(split(lower(col("p_name")), " ")))
       .withColumn("tb", array_distinct(split(lower(col("p_type")), " ")))
       .select(col("p_partkey"),
@@ -396,7 +407,7 @@ object Queries {
         lit(".example")))
       .when(m === 27, lit("portal.auth.gr.example"))
       .otherwise(concat(lit("plain"), col("c_custkey"), lit(".example")))
-    t(s, dir, "customer")
+    Tables.read(s, s"$dir/customer.parquet")
       .withColumn("host", host)
       .withColumn("country", graft.url.Geo.countryOfHost(col("host")))
       .groupBy(col("country"))
@@ -411,7 +422,7 @@ object Queries {
     * deterministic per-row value in [0,1) (the operator under test is the
     * blend/clamp/threshold arithmetic, exactly SQL-expressible). */
   val qElectiveScore: Q = (s, dir) =>
-    t(s, dir, "part")
+    Tables.read(s, s"$dir/part.parquet")
       .withColumn("ta", array_distinct(split(lower(col("p_name")), " ")))
       .withColumn("tb", array_distinct(split(lower(col("p_type")), " ")))
       .withColumn("overlap_ratio",
@@ -435,7 +446,7 @@ object Queries {
     * existing/incoming; the merge is
     * [[graft.sources.Sources.upsertMergeCategories]]. */
   val qCategoryMerge: Q = (s, dir) => {
-    val li = t(s, dir, "lineitem")
+    val li = Tables.read(s, s"$dir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_partkey"),
         array(col("l_returnflag"), col("l_linestatus")).as("categories"))
     val existing = li.filter(col("l_orderkey") % 2 === 0)
@@ -450,7 +461,7 @@ object Queries {
   /** F29: weighted CASE-WHEN text-match score
     * (/root/reference/main.py:679-687). */
   val qWeightedScore: Q = (s, dir) =>
-    t(s, dir, "part")
+    Tables.read(s, s"$dir/part.parquet")
       .withColumn("score",
         when(lower(col("p_name")).contains("green"), 50).otherwise(0) +
         when(lower(col("p_type")).contains("steel"), 25).otherwise(0) +

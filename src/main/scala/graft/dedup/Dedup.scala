@@ -1,8 +1,12 @@
 package graft.dedup
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.url.Canonical
+import graft.util.Tables
 
 /** Document deduplication operators for large-scale training-data
   * pipelines: exact (hash-groupBy), MinHash+LSH, SimHash, and exact
@@ -16,9 +20,6 @@ import graft.url.Canonical
   */
 object Dedup {
 
-  private def t(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
   // guide §2.5 input-skew fix for the SIGNATURE-UDF variants only: the
   // single-row-group documents file scans as ONE task, serializing the
   // per-doc minhash/simhash UDFs on one core. Scans.parallel is a
@@ -26,7 +27,7 @@ object Dedup {
   // token explode) measured FASTER without the extra exchange — the
   // round-6 A/B is in OPTIMIZATION_r06.md.
   private def tp(s: SparkSession, dir: String): DataFrame =
-    graft.util.Scans.parallel(t(s, dir))
+    graft.util.Scans.parallel(Tables.read(s, s"$dir/documents.parquet"))
 
   // ------------------------------------------------------------- exact
 
@@ -34,7 +35,7 @@ object Dedup {
     * 128-bit content hash (md5); at 100 TB the map side hashes locally so
     * only (hash, doc_id) pairs shuffle, not text. */
   val qDedupExact: (SparkSession, String) => DataFrame = (s, dir) =>
-    t(s, dir)
+    Tables.read(s, s"$dir/documents.parquet")
       .groupBy(md5(col("text")).as("content_hash"))
       .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("keep_doc_id"))
       .orderBy(col("content_hash"))
@@ -76,7 +77,7 @@ object Dedup {
   }
 
   val qNeardupTokens: (SparkSession, String) => DataFrame = (s, dir) =>
-    tokenJaccardPairs(t(s, dir), 0.8)
+    tokenJaccardPairs(Tables.read(s, s"$dir/documents.parquet"), 0.8)
 
   // ----------------------------------------------------------- MinHash
 
@@ -314,51 +315,52 @@ object Dedup {
     * near-dup cluster — the reference's fuzzy course-merge analog
     * (/root/reference/database.py:1022-1071 merges per best-match chain).
     *
-    * Algorithm: iterative min-label propagation (each node adopts the
-    * min label among itself and its neighbours until fixpoint). All
-    * distributed: per iteration one join + one hash aggregate, labels
-    * localCheckpoint'd so plans stay flat; iteration count = component
-    * diameter, which for near-dup clusters is small. Termination is
-    * guaranteed (labels strictly decrease). */
+    * Algorithm: iterative min-label propagation to a fixpoint (each node
+    * adopts the min label among itself and its neighbours). Labels only
+    * decrease, so it terminates; the iteration count is the largest
+    * component diameter + 1, which for near-dup clusters is small.
+    *
+    * The adjacency lists and the labels are RDDs that share one
+    * HashPartitioner, so an iteration is ONE shuffle (every node's label
+    * sent to its neighbours and reduced to their minimum), a narrow join
+    * with the current labels and ONE job: the count of moved labels,
+    * run on the new labels, which are localCheckpoint'ed lazily so that
+    * count also materializes them. The adjacency lists are persisted
+    * once; a superseded label checkpoint is freed as soon as its
+    * successor is materialized. */
   def clusterPairs(pairs: DataFrame)
       (implicit spark: SparkSession): DataFrame = {
-    // LAZY checkpoints: each iteration's count() both materializes the
-    // new labels AND reads the moved flags in ONE job (the former eager
-    // checkpoint ran a materialization job and then a second count job —
-    // same trick as the crawl loop's frontier). Superseded label
-    // checkpoints are released as soon as the next one is materialized
-    // instead of waiting for driver GC + ContextCleaner.
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(
-        pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    var labelsRoot = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("cluster_id", col("doc_id"))
-      .localCheckpoint(false)
-    var labels = labelsRoot
-    var changed = 1L
-    while (changed > 0) {
-      val nbrMin = edges
-        .join(labels, edges("src") === labels("doc_id"))
-        .groupBy(col("dst")).agg(min(col("cluster_id")).as("nbr_min"))
-      val next = labels.alias("l")
-        .join(nbrMin, col("l.doc_id") === nbrMin("dst"), "left")
-        .select(col("l.doc_id").as("doc_id"),
-          least(col("l.cluster_id"),
-            coalesce(col("nbr_min"), col("l.cluster_id"))).as("cluster_id"),
-          (col("l.cluster_id") >
-            coalesce(col("nbr_min"), col("l.cluster_id"))).as("moved"))
-        .localCheckpoint(false)
-      changed = next.filter(col("moved")).count()
-      graft.util.Checkpoints.release(labelsRoot)
-      labelsRoot = next
-      labels = next.drop("moved")
+    import spark.implicits._
+    val part = new HashPartitioner(spark.sparkContext.defaultParallelism)
+    val adj = pairs.select(col("doc_a"), col("doc_b")).rdd
+      .flatMap { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        Iterator(a -> b, b -> a)
+      }
+      .groupByKey(part)
+      .mapValues(_.toArray.distinct)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var labels: RDD[(Long, Long)] = adj.mapPartitions(
+      _.map { case (id, _) => (id, id) }, preservesPartitioning = true)
+    var held: Option[RDD[_]] = None
+    var moved = 1L
+    while (moved > 0) {
+      val nbrMin = adj.join(labels, part)
+        .flatMap { case (_, (nbrs, l)) => nbrs.iterator.map(_ -> l) }
+        .reduceByKey(part, math.min(_, _))
+      // every node has a neighbour, so the inner join keeps every node
+      val next = labels.join(nbrMin, part)
+        .mapValues { case (l, m) => (math.min(l, m), m < l) }
+        .localCheckpoint()
+      moved = next.filter(_._2._2).count()
+      held.foreach(org.apache.spark.SparkInternals.freeBlocks)
+      held = Some(next)
+      labels = next.mapValues(_._1)
     }
-    // the final labelsRoot backs the returned Dataset — left live for
-    // the caller; edges are fully consumed
-    graft.util.Checkpoints.release(edges)
-    labels
+    // the last checkpoint backs the returned Dataset — left live for
+    // the caller; the adjacency lists are fully consumed
+    adj.unpersist(blocking = false)
+    labels.toDF("doc_id", "cluster_id")
   }
 
   /** Keep one canonical doc per near-dup cluster: the min doc_id (the

@@ -1,29 +1,33 @@
 package graft.ml
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.feature.{CountVectorizer, IDF, PCA, Tokenizer}
+import org.apache.spark.ml.feature.{CountVectorizer, IDF, Tokenizer}
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.mllib.clustering.KMeans
+import org.apache.spark.mllib.feature.PCA
+import org.apache.spark.mllib.linalg.Vectors
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField,
+  StructType}
+import org.apache.spark.storage.StorageLevel
+import graft.util.Tables
 
 /** Spark ML operator surface (SURVEY.md F25-F28): TF-IDF + cosine
   * recommendation and seeded KMeans + PCA(2) clustering — the
   * reference's sklearn pipelines
   * (/root/reference/recommendation_system/backend/student_recommender.py:139-146,
   * 450-457; /root/reference/main.py:4716-4730 KMeans seed=42 + PCA(2))
-  * re-expressed with org.apache.spark.ml (all present in
-  * /opt/spark/jars spark-mllib).
+  * re-expressed with org.apache.spark.ml (TF-IDF) and its RDD-based
+  * org.apache.spark.mllib core (KMeans, PCA), both in spark-mllib.
   *
-  * Determinism: fixed seed 42 everywhere, vocabulary ordered by
-  * (frequency desc, term asc) via CountVectorizer defaults; outputs
-  * project cluster sizes / top similarities rather than raw vectors so
-  * results are stable across runs.
+  * Determinism: fixed seed 42 everywhere; the vocabulary is ordered by
+  * frequency desc, with ties between equal-count terms broken by
+  * partition-traversal order (CountVectorizer's `top`, see [[tfidf]]);
+  * outputs project cluster sizes / top similarities rather than raw
+  * vectors so results are stable across runs.
   */
 object MlOps {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** TF-IDF document vectors over `documents.text`.
     *
@@ -100,7 +104,7 @@ object MlOps {
   /** F25: TF-IDF cosine recommender — for each query doc (doc_id < 5),
     * the top-5 most similar other docs. */
   val qTfidfSimilar: (SparkSession, String) => DataFrame = (s, dir) => {
-    val vecs = tfidf(t(s, dir, "documents"))
+    val vecs = tfidf(Tables.read(s, s"$dir/documents.parquet"))
       .select(col("doc_id"), col("tfidf"))
       .withColumn("nrm", normVec(col("tfidf")))
     val q = vecs.filter(col("doc_id") < 5)
@@ -169,39 +173,54 @@ object MlOps {
   }
 
   val qTfidfLsh: (SparkSession, String) => DataFrame = (s, dir) => {
-    val vecs = tfidf(t(s, dir, "documents"))
+    val vecs = tfidf(Tables.read(s, s"$dir/documents.parquet"))
       .select(col("doc_id"), col("tfidf"))
     tfidfLshTopK(vecs, col("doc_id") < 5, 5)
   }
 
-  /** F26: KMeans(seed=42) over the embeddings + PCA(2) coordinates —
-    * cluster sizes + per-cluster PCA centroid (stable summary). */
+  /** F26: KMeans(k=8, seed=42) over the embeddings + PCA(2) coordinates
+    * — cluster sizes + per-cluster PCA centroid (stable summary).
+    *
+    * Both fits run on ONE persisted RDD[(label, vector)] at the scan's
+    * own partitioning: mllib's KMeans with ml's defaults (maxIter 20,
+    * k-means|| with 2 init steps, epsilon 1e-4) — the algorithm
+    * `ml.KMeans.fit` delegates to, over the same points in the same
+    * partitions, so the centers are bit-identical — then mllib's PCA(2),
+    * which `ml.PCA.fit` wraps the same way. What the ml wrappers added
+    * never reached this output: a block-solver probe job, the cached
+    * rows deserialized again on every Lloyd iteration, and a grouping of
+    * the predictions for the training summary's cluster sizes. Predict
+    * and project happen in one map, then the aggregate. */
   val qKmeansClusters: (SparkSession, String) => DataFrame = (s, dir) => {
-    val toVec = udf((a: Seq[Float]) =>
-      org.apache.spark.ml.linalg.Vectors.dense(a.map(_.toDouble).toArray))
-    val vecs = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("label"), toVec(col("embedding")).as("features"))
-      .cache()
-    val km = new KMeans().setK(8).setSeed(42L).setFeaturesCol("features")
-      .setPredictionCol("cluster")
-    val clustered = km.fit(vecs).transform(vecs)
-    val pca = new PCA().setK(2).setInputCol("features")
-      .setOutputCol("pca").fit(vecs)
-    val first = udf((v: Vector) => v(0))
-    val second = udf((v: Vector) => v(1))
-    val out = pca.transform(clustered)
+    val emb = Tables.read(s, s"$dir/embeddings.parquet")
+      .select(col("label"), col("embedding"))
+    val points = emb.rdd.map { r =>
+      (r.get(0), Vectors.dense(r.getSeq[Float](1).map(_.toDouble).toArray))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    val vecs = points.values
+    val km = new KMeans().setK(8).setSeed(42L).setMaxIterations(20)
+      .setInitializationMode(KMeans.K_MEANS_PARALLEL)
+      .setInitializationSteps(2).setEpsilon(1e-4)
+      .run(vecs)
+    val pca = new PCA(2).fit(vecs)
+    val rows = points.map { case (label, v) =>
+      val p = pca.transform(v)
+      Row(km.predict(v), label, p(0), p(1))
+    }
+    val schema = StructType(Seq(StructField("cluster", IntegerType, false),
+      emb.schema("label"), StructField("x", DoubleType, false),
+      StructField("y", DoubleType, false)))
+    val out = s.createDataFrame(rows, schema)
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("size"),
-        round(avg(first(col("pca"))), 4).as("pca_x"),
-        round(avg(second(col("pca"))), 4).as("pca_y"),
+        round(avg(col("x")), 4).as("pca_x"),
+        round(avg(col("y")), 4).as("pca_y"),
         countDistinct(col("label")).as("n_labels"))
       .orderBy(col("cluster"))
-      // the k-row summary is materialized eagerly so the feature-vector
-      // cache (pinned for the two ML fits above) can be released before
-      // returning — the lazy shape leaked one embeddings-sized cache per
-      // invocation for the life of the session
+      // the k-row summary is materialized eagerly so the points (pinned
+      // for the two fits above) can be released before returning
       .localCheckpoint(true)
-    vecs.unpersist()
+    points.unpersist(blocking = false)
     out
   }
 
@@ -209,7 +228,7 @@ object MlOps {
     * with a compatibility penalty
     * (course_recommender_for_university.py:345-365). */
   val qCompositeScore: (SparkSession, String) => DataFrame = (s, dir) => {
-    val p = t(s, dir, "part")
+    val p = Tables.read(s, s"$dir/part.parquet")
     val freqNorm = col("p_size").cast("double") / 50.0
     val compat = (col("p_retailprice") % 100.0) / 100.0
     val novelty = (col("p_partkey") % 7).cast("double") / 7.0

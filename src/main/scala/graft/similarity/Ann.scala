@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.corpus.Synth
+import graft.util.Tables
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -14,9 +15,6 @@ import graft.corpus.Synth
   * equi-join, so the corpus is scanned once and never cross-joined.
   */
 object Ann {
-
-  private def t(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
 
   /** Codegen dot product of two double-array columns. */
   def dot(x: Column, y: Column): Column =
@@ -65,7 +63,7 @@ object Ann {
   }
 
   val qAnnTopK: (SparkSession, String) => DataFrame = (s, dir) => {
-    val e = t(s, dir)
+    val e = Tables.read(s, s"$dir/embeddings.parquet")
     // corpus side carries the per-pair scoring work; the testdata scan is
     // one unsplittable row group (guide §2.5, graft.util.Scans)
     bruteForceTopK(graft.util.Scans.parallel(e),
@@ -75,7 +73,7 @@ object Ann {
   /** Similar-pair search on a sampled subset (embedding near-dup shape):
     * pairs (a % 25 == 0) × all with rounded cosine ≥ 0.35. */
   val qEmbSimilarPairs: (SparkSession, String) => DataFrame = (s, dir) => {
-    val e = t(s, dir)
+    val e = Tables.read(s, s"$dir/embeddings.parquet")
     val a = e.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("vec_a"), asDouble(col("embedding")).as("va"))
       .withColumn("na", norm(col("va")))
@@ -172,7 +170,7 @@ object Ann {
   }
 
   val qAnnLsh: (SparkSession, String) => DataFrame = (s, dir) => {
-    val e = t(s, dir)
+    val e = Tables.read(s, s"$dir/embeddings.parquet")
     lshTopK(graft.util.Scans.parallel(e),
       e.filter(col("vec_id") < 5), 10)(s)
   }

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Tables
 
 /** Text-analysis operators for training-data pipelines: token counting,
   * quality scoring, language-ID, and document fingerprinting — all
@@ -10,9 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object TextStats {
 
-  private def t(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
   /** Whitespace token count, empty-safe (both engines agree on the
     * empty-string edge via the same CASE guard). */
   def tokenCount(text: Column): Column =
@@ -20,7 +18,7 @@ object TextStats {
       .otherwise(size(split(trim(text), "\\s+")))
 
   val qDocTokens: (SparkSession, String) => DataFrame = (s, dir) =>
-    t(s, dir).select(col("doc_id"),
+    Tables.read(s, s"$dir/documents.parquet").select(col("doc_id"),
         tokenCount(col("text")).as("n_tokens"),
         length(col("text")).as("n_chars_computed"),
         col("n_chars"))
@@ -32,7 +30,7 @@ object TextStats {
     * length — the length/punct/stopword heuristics of web-corpus quality
     * filters (C4/Gopher-style rules), all per-row IEEE-exact arithmetic. */
   val qDocQuality: (SparkSession, String) => DataFrame = (s, dir) => {
-    val d = t(s, dir)
+    val d = Tables.read(s, s"$dir/documents.parquet")
       .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
       .withColumn("n_tokens", tokenCount(col("text")))
       .withColumn("letters",
@@ -55,7 +53,8 @@ object TextStats {
 
   /** Language distribution over the corpus (lang × source). */
   val qLangDist: (SparkSession, String) => DataFrame = (s, dir) =>
-    t(s, dir).groupBy(col("lang"), col("source"))
+    Tables.read(s, s"$dir/documents.parquet")
+      .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"))
       .orderBy(col("lang"), col("source"))
@@ -63,7 +62,7 @@ object TextStats {
   /** Document fingerprint: md5 of whitespace-normalized lowercase text
     * (rolling-hash analog, SQL-expressible for the oracle). */
   val qDocFingerprint: (SparkSession, String) => DataFrame = (s, dir) =>
-    t(s, dir).select(col("doc_id"),
+    Tables.read(s, s"$dir/documents.parquet").select(col("doc_id"),
         md5(lower(regexp_replace(col("text"), "\\s+", " ")))
           .as("fingerprint"))
       .orderBy(col("doc_id"))
@@ -181,7 +180,7 @@ object TextStats {
     * uppercase Greek/Turkish, this twin must move to rows-only. */
   val qLangId: (SparkSession, String) => DataFrame = (s, dir) => {
     val detect = udf((text: String) => detectLang(text))
-    t(s, dir)
+    Tables.read(s, s"$dir/documents.parquet")
       .withColumn("predicted", detect(col("text")))
       .groupBy(col("lang"), col("predicted"))
       .agg(count(lit(1)).as("n_docs"))

@@ -198,6 +198,47 @@ class OpsSpec extends SparkSpec {
     assert(sim.length === 25) // 5 queries × top-5
   }
 
+  /** q_kmeans_clusters in its former formulation: ml.KMeans and ml.PCA
+    * fitted on a cached Dataset of ml vectors — the reference the mllib
+    * path must match row for row. */
+  private def kmeansReference(dir: String) = {
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.feature.PCA
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
+    val toVec = udf((a: Seq[Float]) => Vectors.dense(a.map(_.toDouble).toArray))
+    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id"), col("label"),
+        toVec(col("embedding")).as("features"))
+      .cache()
+    val clustered = new KMeans().setK(8).setSeed(42L)
+      .setFeaturesCol("features").setPredictionCol("cluster")
+      .fit(vecs).transform(vecs)
+    val pca = new PCA().setK(2).setInputCol("features").setOutputCol("pca")
+      .fit(vecs)
+    val first = udf((v: Vector) => v(0))
+    val second = udf((v: Vector) => v(1))
+    val out = pca.transform(clustered)
+      .groupBy(col("cluster"))
+      .agg(count(lit(1)).as("size"),
+        round(avg(first(col("pca"))), 4).as("pca_x"),
+        round(avg(second(col("pca"))), 4).as("pca_y"),
+        countDistinct(col("label")).as("n_labels"))
+      .orderBy(col("cluster"))
+    val rows = out.collect().toSeq
+    vecs.unpersist()
+    (out.schema.map(f => (f.name, f.dataType)), rows)
+  }
+
+  test("q_kmeans_clusters ≡ the former ml.KMeans + ml.PCA formulation " +
+      "at sf0.001 and sf0.01") {
+    Seq(dir, "/root/testdata/sf0.01").foreach { d =>
+      val got = graft.ml.MlOps.qKmeansClusters(spark, d)
+      val (schema, rows) = kmeansReference(d)
+      assert(got.schema.map(f => (f.name, f.dataType)) === schema, d)
+      assert(got.collect().toSeq === rows, d)
+    }
+  }
+
   test("tfidf LSH twin: bucketed candidates, recall floor vs brute force") {
     val brute = graft.ml.MlOps.qTfidfSimilar(spark, dir).collect()
       .groupBy(_.getAs[Long]("query_id"))

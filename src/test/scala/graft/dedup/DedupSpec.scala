@@ -1,5 +1,6 @@
 package graft.dedup
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -89,6 +90,66 @@ class DedupSpec extends SparkSpec {
     assert(got === want)
   }
 
+  private def clusters(pairs: DataFrame): Map[Long, Long] =
+    Dedup.clusterPairs(pairs)(spark).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Driver-side union-find oracle: every node of `edges` → the min id
+    * of its connected component. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (x, y) =>
+      val (a, b) = (find(x), find(y))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+      .map(id => id -> find(id)).toMap
+  }
+
+  test("clusterPairs ≡ union-find on random graphs: chains up to length " +
+      "30, stars, disjoint pairs and random edge sets, ids shuffled") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import spark.implicits._
+    // component shapes over local ids 0..n-1
+    val chain = Gen.choose(2, 30).map(n =>
+      (0 until n - 1).map(i => (i.toLong, i + 1L)))
+    val star = Gen.choose(2, 12).map(n => (1 until n).map(i => (0L, i.toLong)))
+    val pair = Gen.const(Seq((0L, 1L)))
+    val random = for {
+      n <- Gen.choose(2, 12)
+      es <- Gen.nonEmptyListOf(Gen.zip(Gen.choose(0L, n - 1L),
+        Gen.choose(0L, n - 1L)))
+    } yield es.filter { case (a, b) => a != b }
+    val graphs = for {
+      comps <- Gen.nonEmptyListOf(Gen.oneOf(chain, star, pair, random))
+      seed <- Gen.long
+    } yield {
+      // disjoint id ranges per component, then one random relabelling so
+      // the component minimum sits anywhere (chain ends, middles, leaves)
+      val edges = comps.zipWithIndex.flatMap { case (es, c) =>
+        es.map { case (a, b) => (a + 100L * c, b + 100L * c) }
+      }
+      val ids = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+      val relabel = ids.zip(new scala.util.Random(seed).shuffle(ids)).toMap
+      edges.map { case (a, b) => (relabel(a), relabel(b)) }
+    }
+    val prop = Prop.forAll(graphs) { edges =>
+      clusters(edges.toDF("doc_a", "doc_b")) == unionFind(edges)
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, res)
+    // the longest shape on its own: a 30-node chain whose minimum is at
+    // the far end takes 29 propagation steps
+    val longest = (1L until 30L).map(i => (i, i + 1L)).reverse
+    assert(clusters(longest.toDF("doc_a", "doc_b")) === unionFind(longest))
+    assert(clusters(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).isEmpty)
+  }
+
   test("clusterPairs ≡ brute-force union-find; keepCanonical keeps " +
       "exactly min-id per cluster plus all unpaired docs") {
     import spark.implicits._
@@ -96,21 +157,8 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L),
       (21L, 22L), (20L, 22L), (30L, 31L))
       .toDF("doc_a", "doc_b")
-    val got = Dedup.clusterPairs(pairs)(spark).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // driver-side union-find oracle
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    pairs.collect().foreach { r =>
-      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
-      if (a != b) parent(math.max(a, b)) = math.min(a, b)
-    }
-    val ids = got.keySet
-    val want = ids.map(id => id -> find(id)).toMap
-    assert(got === want)
+    val got = clusters(pairs)
+    assert(got === unionFind(pairs.as[(Long, Long)].collect().toSeq))
     // canonical keeper: min per cluster survives, losers dropped,
     // unpaired docs untouched
     val docs = (1L to 40L).toDF("doc_id")
