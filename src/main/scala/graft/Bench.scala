@@ -5,8 +5,9 @@ import graft.corpus.Synth
 import graft.crawl.Crawler
 
 /** Benchmark main (driver contract): times every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR at local[$SPARK_GRAFT_CPUS], plus the crawl-engine
-  * throughput on a synthesized corpus, and prints ONE JSON line.
+  * SPARK_GRAFT_SF_DIR at local[$SPARK_GRAFT_CPUS] (default: every core),
+  * plus the crawl-engine throughput on a synthesized corpus, and prints
+  * ONE JSON line.
   *
   * Noise protocol (round 4 — this host shows documented 3-4× swings
   * between identically-configured runs, and BENCH_r03 could not
@@ -125,16 +126,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(SparkTune.conf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = SparkTune.cpus
+    val spark = SparkTune.session(s"local[$cpus]", cpus)
 
     // cold pass, then 3 interleaved warm passes (median reported) — see
     // the noise protocol in the class scaladoc

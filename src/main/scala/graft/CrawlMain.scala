@@ -12,7 +12,7 @@ import graft.crawl.{Crawler, Snapshot}
   * (fetch + dedup + skill-extract)".
   *
   * Usage: graft.CrawlMain [nHosts] [basePages] [maxRounds] [snapshotDir|-] [roundMs] [richness]
-  * Env:   SPARK_GRAFT_CPUS (default 4) — local[N] parallelism; the
+  * Env:   SPARK_GRAFT_CPUS (default: every core) — local[N] parallelism; the
   *        N-vs-4N scaling evidence for BASELINE.md runs this main at
   *        two values on the same input.
   *        GRAFT_BLOOM=1 — route the seen-set through the co-partitioned
@@ -31,21 +31,12 @@ object CrawlMain {
     val snapDir = if (args.length > 3 && args(3) != "-") Some(args(3)) else None
     val roundMs = if (args.length > 4) args(4).toLong else 4000L
     val richness = if (args.length > 5) args(5).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-crawl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(SparkTune.conf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = SparkTune.cpus
+    implicit val spark: SparkSession = SparkTune.session(s"local[$cpus]", cpus)
 
     val bucketed = sys.env.get("GRAFT_BUCKETED").contains("1")
     val pages0 = Synth.pages(spark, nHosts, basePages, richness).toDF()
-    val pages = (if (bucketed) Crawler.bucketCorpus(pages0, cpus.toInt)
+    val pages = (if (bucketed) Crawler.bucketCorpus(pages0, cpus)
       else pages0).cache()
     val corpusSize = pages.count() // materialize before timing the crawl
     val robots = Synth.robots(spark, nHosts)

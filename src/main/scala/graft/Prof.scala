@@ -3,26 +3,28 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 import scala.collection.concurrent.TrieMap
 
-/** Diagnostic wall/CPU accumulators for hot per-row functions (local
-  * mode: driver + executors share the JVM, so a global registry works).
+/** Diagnostic wall-time accumulators for hot per-row functions (local
+  * mode: driver + executors share the JVM, so a global registry works),
+  * printed and reset after every round by the crawl's round log.
   *
   * Gated: the wrapped UDFs run millions of times per crawl round across
-  * all task threads, so the timers are active only when `GRAFT_PROF=1`
-  * or `GRAFT_ROUND_LOG=1` is set at JVM start — otherwise `time` is a
-  * single static-final branch and zero shared-state traffic (shared
-  * AtomicLong CASes from 32 cores are exactly the cache-line contention
-  * the crawl's GC work removed). Accumulation uses striped [[LongAdder]]s
-  * rather than AtomicLongs for the same reason. */
+  * all task threads, so the timers run only under that round log,
+  * `GRAFT_ROUND_LOG=1` at JVM start — otherwise `time` is a single
+  * static-final branch and zero shared-state traffic (shared AtomicLong
+  * CASes from 32 cores are exactly the cache-line contention the crawl's
+  * GC work removed). Accumulation uses striped [[LongAdder]]s rather than
+  * AtomicLongs for the same reason. */
 object Prof {
-  /** Read once at class load; flipping it requires a new JVM. */
-  val enabled: Boolean = sys.env.get("GRAFT_PROF").contains("1") ||
-    sys.env.get("GRAFT_ROUND_LOG").contains("1")
+  /** `GRAFT_ROUND_LOG=1`: the per-round timings printed by `crawl.Round`
+    * and `crawl.Crawler`, these timers included. Read once at class
+    * load; flipping it requires a new JVM. */
+  val roundLog: Boolean = sys.env.get("GRAFT_ROUND_LOG").contains("1")
 
   private val timers = TrieMap.empty[String, LongAdder]
   private val counts = TrieMap.empty[String, LongAdder]
 
   @inline def time[T](name: String)(f: => T): T = {
-    if (!enabled) f
+    if (!roundLog) f
     else {
       val t0 = System.nanoTime()
       val r = f
@@ -31,13 +33,6 @@ object Prof {
       r
     }
   }
-
-  /** Count-only accumulator (no timer) for call-census diagnostics. */
-  @inline def hit(name: String): Unit =
-    if (enabled) counts.getOrElseUpdate(name, new LongAdder).increment()
-
-  def count(name: String): Long =
-    counts.get(name).map(_.sum()).getOrElse(0L)
 
   def snapshotAndReset(): String = {
     val parts = timers.keys.toSeq.sorted.map { k =>

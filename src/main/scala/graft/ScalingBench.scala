@@ -20,7 +20,9 @@ object ScalingBench {
   /** The measurement session: one parallelism level, every engine knob
     * identical across legs. Shared by ScalingBench and ScalingCensus so a
     * census component and a crawl leg at the same `cores` see the same
-    * engine configuration.
+    * engine configuration. It is [[SparkTune.session]] (AQE on, `cores`
+    * shuffle partitions) plus only what a leg layout adds: the
+    * local-cluster executors below and `GRAFT_NOBC`'s thresholds.
     *
     * GRAFT_LOCAL_CLUSTER=<execMemMb>: run as a pseudo-cluster of
     * (cores/8) executor JVMs × 8 cores each instead of one local[N]
@@ -55,16 +57,8 @@ object ScalingBench {
       case None => System.err.println(
         s"[session] resolved layout: single JVM, master=$master")
     }
-    // the SPARK_GC_OPTS A/B knob (build.sbt) reaches the driver JVM via
-    // sbt javaOptions; executors are separate JVMs in local-cluster mode
-    // and must get the SAME collector or a GC A/B silently compares
-    // mixed-collector runs
-    val gcOpts = sys.env.getOrElse("SPARK_GC_OPTS", "-XX:+UseParallelGC")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cores)
-    val builder = localCluster match {
-      case Some(_) =>
+    val clusterConf = layout.fold(Map.empty[String, String]) {
+      case (_, _, memMb) =>
         // exact-artifact match — a loose endsWith(".jar") once shipped
         // whatever stale jar listed first (e.g. an old version) to the
         // executors; multiple matches must fail loudly, not pick one
@@ -79,40 +73,35 @@ object ScalingBench {
             sys.error("run `sbt package` before local-cluster legs")
           case many => sys.error(s"ambiguous app jars: ${many.mkString(", ")}")
         }
-        builder0
-          .config("spark.jars", jar)
+        Map("spark.jars" -> jar,
           // local-cluster[n,c,mem] caps the WORKER's memory; the executor
           // JVM itself still defaults to 1g without this
-          .config("spark.executor.memory",
-            s"${sys.env.get("GRAFT_LOCAL_CLUSTER").get.toInt}m")
-          .config("spark.executor.extraJavaOptions", gcOpts)
-      case None => builder0
+          "spark.executor.memory" -> s"${memMb}m",
+          // the SPARK_GC_OPTS A/B knob (build.sbt) reaches the driver JVM
+          // via sbt javaOptions; executors are separate JVMs and must get
+          // the SAME collector or a GC A/B silently compares
+          // mixed-collector runs
+          "spark.executor.extraJavaOptions" ->
+            sys.env.getOrElse("SPARK_GC_OPTS", "-XX:+UseParallelGC"))
     }
-    val spark = builder
-      // GRAFT_AQE=false trades AQE's per-stage driver re-planning (a
-      // serial, round-trip-heavy cost in a 15-round loop of small stages)
-      // for static plans — an A/B knob for the scaling measurement
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
-      // GRAFT_NOBC=1: disable AUTOMATIC broadcast-join conversion (both
-      // the static planner threshold and AQE's runtime threshold, which
-      // defaults to it) — the sandbox emulation of the ≳10⁷-row regime
-      // where the seen set no longer fits a broadcast. Explicit
-      // broadcast() hints on tables bounded by construction (the
-      // budget-bounded selected fetch set, robots, budgets) survive a
-      // -1 threshold, so ONLY the unhinted seen-set anti-joins change
-      // shape: the exact leg becomes the full frontier × seen shuffle
-      // the break-even model assumes, while the Bloom leg's verify join
-      // shuffles just the maybe-seen sliver against the seen table.
-      // This is the knob behind BASELINE.md's measured break-even legs.
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        if (sys.env.get("GRAFT_NOBC").contains("1")) "-1" else "10485760")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        if (sys.env.get("GRAFT_NOBC").contains("1")) "-1" else "10485760")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(SparkTune.conf)
-      .getOrCreate()
+    // GRAFT_NOBC=1: disable AUTOMATIC broadcast-join conversion (both
+    // the static planner threshold and AQE's runtime threshold, which
+    // defaults to it) — the sandbox emulation of the ≳10⁷-row regime
+    // where the seen set no longer fits a broadcast. Explicit
+    // broadcast() hints on tables bounded by construction (the
+    // budget-bounded selected fetch set, robots, budgets) survive a
+    // -1 threshold, so ONLY the unhinted seen-set anti-joins change
+    // shape: the exact leg becomes the full frontier × seen shuffle
+    // the break-even model assumes, while the Bloom leg's verify join
+    // shuffles just the maybe-seen sliver against the seen table.
+    // This is the knob behind BASELINE.md's measured break-even legs.
+    // Unset, both thresholds keep Spark's default (10 MiB).
+    val noBroadcast =
+      if (sys.env.get("GRAFT_NOBC").contains("1")) Map(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+      else Map.empty[String, String]
+    val spark = SparkTune.session(master, cores, clusterConf ++ noBroadcast)
     // Local-cluster executors register ASYNCHRONOUSLY after getOrCreate
     // returns; until then CoarseGrainedSchedulerBackend.defaultParallelism
     // is max(registeredCores, 2) = 2, and any spark.range-backed synthesis
@@ -131,7 +120,6 @@ object ScalingBench {
         s"only ${spark.sparkContext.defaultParallelism} of $cores cores " +
         "registered after 120 s — check worker/executor logs")
     }
-    spark.sparkContext.setLogLevel("WARN")
     StageLog.maybeInstall(spark.sparkContext)
     spark
   }

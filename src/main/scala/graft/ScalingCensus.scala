@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.corpus.Synth
+import graft.crawl.Round
 import graft.extract.{EscoMatcher, TextExtract}
 import graft.frontier.Frontier
 
@@ -24,17 +24,17 @@ import graft.frontier.Frontier
   * Components mirror the round's real work (crawl/Round.scala):
   *  - extract_cpu: the exact enrichment pipeline of Round.run — single
   *    parse extractTextAndLinks + ESCO matcher + tokenize-once
-  *    signatures (Round.scala:148-192) over every corpus page. No
+  *    `Round.signatures` (Round.run step 4) over every corpus page. No
   *    exchange; pure per-row CPU + allocation.
-  *  - corpus_probe: the fetch-join shape (Round.scala:166-184) — a
+  *  - corpus_probe: the fetch-join shape (Round.run step 3) — a
   *    budget-sized selected set broadcast against the cached corpus,
   *    html projected, length-aggregated. Columnar-cache decompression +
   *    memory bandwidth; the term the round-4 decomposition blames for
   *    the shared-bus ceiling.
   *  - frontier_window: the politeness budget selection
-  *    (Frontier.selectRound:109-129) over a full-corpus frontier — one
+  *    (Frontier.selectRound) over a full-corpus frontier — one
   *    hash exchange on host + per-host sort + row_number.
-  *  - hash_merge: the frontier merge (Frontier.merge:141-160) of two
+  *  - hash_merge: the frontier merge (Frontier.merge) of two
   *    full-corpus frontiers — union + groupBy(url_hash).agg(min(struct))
   *    with map-side partial aggregation; the anti-join/dedup exchange
   *    class.
@@ -67,24 +67,15 @@ object ScalingCensus {
     val dict = EscoMatcher.broadcastDict(spark,
       Synth.escoLabels().map(l => (l.concept_uri, l.preferred_label)))
 
-    // the exact enrichment expressions of Round.run (Round.scala:148-192)
+    // the enrichment expressions of Round.run's step 4
     val matchUris = EscoMatcher.matcherUdf(dict)
-    val signatures = udf((text: String) => {
-      val toks = graft.dedup.Dedup.tokens(text)
-      val hs = graft.dedup.Dedup.tokenHashes(toks)
-      (graft.dedup.Dedup.simhashOfHashes(hs),
-        graft.dedup.Dedup.minhashOfArr(
-          graft.dedup.Dedup.shingleHashesOf(hs)).toSeq,
-        graft.text.TextStats.detectLang(text),
-        toks.length)
-    })
 
     def extractCpu(): Long = pages
       .select(col("url"), col("html"))
       .withColumn("ex", TextExtract.extractTextAndLinks(col("html")))
       .select(col("ex._1").as("text"), col("ex._2").as("links"))
       .withColumn("skill_uris", matchUris(col("text")))
-      .withColumn("sig", signatures(col("text")))
+      .withColumn("sig", Round.signatures(col("text")))
       // aggregate over every derived column so nothing prunes away
       .select((length(col("text")) + size(col("links")) +
         size(col("skill_uris")) + col("sig._4")).as("w"))

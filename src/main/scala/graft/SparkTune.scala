@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Host I/O tuning shared by every entry point's SparkSession.
+/** The one place an entry point's SparkSession is built (`session`),
+  * and the host I/O tuning every such session carries (`conf`).
   *
   * Round-2 diagnosis (BASELINE.md): on this sandbox kernel,
   * `FileChannel.transferTo` falls back to its mmap-copy path and
@@ -43,4 +44,28 @@ object SparkTune {
     // knob that keeps 1000 executors' local disks bounded over a
     // multi-day crawl.
     "spark.cleaner.periodicGC.interval" -> "2min")
+
+  /** Local parallelism of an entry point: `SPARK_GRAFT_CPUS` when set,
+    * else every core this JVM may use. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session every main, the specs and the scaling legs run on:
+    * `cores` shuffle partitions, AQE on, UTC, no UI, [[conf]], then
+    * `extra` (a caller's own settings, e.g. local-cluster executors),
+    * with the log level at WARN. */
+  def session(master: String, cores: Int,
+      extra: Map[String, String] = Map.empty): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(conf)
+      .config(extra)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

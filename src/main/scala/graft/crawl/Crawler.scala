@@ -300,7 +300,7 @@ object Crawler {
         out.release()
         if (snapshot.isDefined || !retainResults) out.releaseResults()
         continue = enqueued > 0L
-        if (Round.roundLog) System.err.println(
+        if (graft.Prof.roundLog) System.err.println(
           f"[crawl] round ${state.round - 1}%3d fetched=${out.fetchedCount}%7d " +
           f"total=${state.totalFetched}%8d secs=${(System.nanoTime() - t0) / 1e9}%7.2f " +
           f"matchCalls=${graft.extract.EscoMatcher.callCount.sumThenReset()}%8d " +

@@ -4,6 +4,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.corpus.Synth
 import graft.extract.{EscoMatcher, TextExtract}
 import graft.frontier.Frontier
 import graft.model._
@@ -174,17 +175,6 @@ object Round {
     val matchUris = EscoMatcher.matcherUdf(dict)
     val labelOf = udf((uris: Seq[String]) =>
       uris.map(u => dict.value.labelOf.getOrElse(u, u)).sorted)
-    // hash each token exactly once; simhash + shingle/minhash derive from
-    // the primitive hash array (no per-shingle strings, no boxed sets)
-    val signatures = udf((text: String) => graft.Prof.time("sig") {
-      val toks = graft.dedup.Dedup.tokens(text)
-      val hs = graft.dedup.Dedup.tokenHashes(toks)
-      (graft.dedup.Dedup.simhashOfHashes(hs),
-        graft.dedup.Dedup.minhashOfArr(
-          graft.dedup.Dedup.shingleHashesOf(hs)).toSeq,
-        graft.text.TextStats.detectLang(text),
-        toks.length)
-    })
     // `ex` is referenced twice (text, links); after projection collapse
     // both land in one Project and whole-stage codegen's subexpression
     // elimination evaluates the UDF once per row (the round log's
@@ -249,7 +239,7 @@ object Round {
     val lineageRows = lineageOf(results.toDF(), roundNo).collect()
     val lineage = spark.createDataset(lineageRows.toSeq)
     val fetchedCount = lineageRows.map(_.fetch_count).sum
-    if (roundLog) System.err.println(
+    if (graft.Prof.roundLog) System.err.println(
       f"[round $roundNo%3d] fetch+extract action: " +
       f"${(System.nanoTime() - tRoundStart) / 1e9}%7.2f s")
     if (planLog) System.err.println(
@@ -274,7 +264,7 @@ object Round {
     // separate anti-joins would shuffle the candidate set twice; the
     // union side is hash-partitioned once instead
     val candidates = Frontier.robotsGate(Frontier.fromUrls(rawLinks,
-        Synthesized.priorityKeywords, Synthesized.excludeKeywords), robots)
+        Synth.priorityKeywords, Synth.excludeKeywords), robots)
       .toDF()
       .join(seenHashes.unionByName(results.select("url_hash").toDF()),
         Seq("url_hash"), "left_anti")
@@ -315,17 +305,24 @@ object Round {
       }
   }
 
-  /** Diagnostics switches, read once per JVM: `GRAFT_ROUND_LOG=1` prints
-    * per-round timings, `GRAFT_PLAN_LOG=1` the round's physical plans
-    * (`GRAFT_PLAN_FULL` set raises the fetch-join print limit). */
-  private[crawl] val roundLog = sys.env.get("GRAFT_ROUND_LOG").contains("1")
+  /** Plan diagnostics, read once per JVM: `GRAFT_PLAN_LOG=1` prints the
+    * round's physical plans (`GRAFT_PLAN_FULL` set raises the fetch-join
+    * print limit). The per-round timings, `GRAFT_ROUND_LOG`, are
+    * [[graft.Prof.roundLog]]. */
   private val planLog = sys.env.get("GRAFT_PLAN_LOG").contains("1")
   private val planLimit = sys.env.get("GRAFT_PLAN_FULL").fold(2000)(_ => 20000)
 
-  /** Keyword lists used for candidate scoring — the corpus generator and
-    * the engine share these gates (apify.js:12-30 analogs). */
-  object Synthesized {
-    val priorityKeywords: Seq[String] = graft.corpus.Synth.priorityKeywords
-    val excludeKeywords: Seq[String] = graft.corpus.Synth.excludeKeywords
-  }
+  /** Dedup signatures and language of a page's text: simhash, minhash,
+    * detected language and token count. Each token is hashed exactly
+    * once; simhash and shingle/minhash derive from the primitive hash
+    * array (no per-shingle strings, no boxed sets). */
+  val signatures = udf((text: String) => graft.Prof.time("sig") {
+    val toks = graft.dedup.Dedup.tokens(text)
+    val hs = graft.dedup.Dedup.tokenHashes(toks)
+    (graft.dedup.Dedup.simhashOfHashes(hs),
+      graft.dedup.Dedup.minhashOfArr(
+        graft.dedup.Dedup.shingleHashesOf(hs)).toSeq,
+      graft.text.TextStats.detectLang(text),
+      toks.length)
+  })
 }

@@ -112,7 +112,7 @@ object EscoMatcher extends Serializable {
   val callCount = new java.util.concurrent.atomic.LongAdder()
 
   def matchUris(dict: Dict, text: String): Seq[String] = {
-    if (graft.Prof.enabled) callCount.increment()
+    if (graft.Prof.roundLog) callCount.increment()
     val tokens = normTokens(text)
     if (tokens.isEmpty) return Nil
     val first = dict.firstTokens

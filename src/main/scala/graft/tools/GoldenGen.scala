@@ -26,14 +26,7 @@ object GoldenGen {
 
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "src/test/resources"
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.SparkTune.conf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = graft.SparkTune.session("local[4]", 4)
 
     val pages = Synth.pages(spark, NHosts, Base).toDF().cache()
     val robots = Synth.robots(spark, NHosts)

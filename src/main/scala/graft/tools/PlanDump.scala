@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for declared queries to a directory
   * (round-6 optimization evidence: plans/r06/<query>_{before,after}.txt).
@@ -15,16 +14,8 @@ object PlanDump {
     val suffix = args(2)
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.SparkTune.conf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.SparkTune.cpus
+    val spark = graft.SparkTune.session(s"local[$cpus]", cpus)
     Files.createDirectories(Paths.get(outDir))
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.forall(_.contains(name))) {
