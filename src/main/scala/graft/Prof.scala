@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.LongAdder
 import scala.collection.concurrent.TrieMap
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Diagnostic wall-time accumulators for hot per-row functions (local
   * mode: driver + executors share the JVM, so a global registry works),
@@ -41,5 +43,19 @@ object Prof {
       f"$k=$s%.1fs/$n"
     }
     parts.mkString(" ")
+  }
+
+  /** Spark's Janino compiles in this JVM so far and their nanoseconds:
+    * the misses of its generated-class cache (`SparkTune.conf`), the
+    * driver's and, in local mode, the executors' together. Call it with
+    * a session active: a first call loads Spark's code generator, which
+    * sizes its cache from the active session's conf. */
+  def codegen(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
+  /** `codegen=<compiles>/<ms>` since `from`, an earlier [[codegen]]. */
+  def codegenSince(from: (Long, Long)): String = {
+    val (n, ns) = codegen()
+    f"codegen=${n - from._1}/${(ns - from._2) / 1e6}%.0fms"
   }
 }

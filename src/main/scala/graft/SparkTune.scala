@@ -25,6 +25,33 @@ import org.apache.spark.sql.SparkSession
   * On a real multi-executor cluster the same settings are per-executor
   * conf; with ≤ 8 cores per executor the mmap contention largely
   * disappears, but streamed copies are never worse on many-core hosts.
+  *
+  * `spark.sql.codegen.cache.maxEntries=4096` — Spark compiles each
+  * generated class with Janino and keeps it in one JVM-wide LRU of this
+  * many entries (default 100), so a plan that ran before runs its
+  * compiled, JIT-warm class again. The default is far below this
+  * engine's working set:
+  *
+  *  - an entry is keyed by (class loader, source): in local mode every
+  *    class takes two, the driver's compile check and the executor
+  *    task's loader;
+  *  - Guava splits the LRU into 4 segments that evict separately, so
+  *    about 25 entries are live per segment;
+  *  - a crawl round needs about 150 entries, the 8 queries perfbench
+  *    times about 220, `graft.Bench` (52 queries, the crawl legs) 640.
+  *
+  * With 100 entries a warm pass of those 8 queries recompiled about 220
+  * classes and a steady crawl round 109 (CodegenCacheSpec). The size
+  * comes from the largest single-JVM runs, counted with an ample cache,
+  * where every compile is a distinct entry: the tier-1 test JVM compiles
+  * 1509 distinct classes (8315 compiles and 103 s of Janino time at 100
+  * entries, 21.8 s with all cached) and `graft.Bench` at sf0.01 640
+  * (4888 compiles, 56.7 s → 13.9 s). 4096 leaves each segment 1024
+  * entries, 2.7x the tier-1 set. Retained classes cost metaspace: used
+  * Metaspace after the run grew 236.9 → 245.8 MB for tier-1 and
+  * 207.1 → 211.3 MB for `graft.Bench`. It is a static SQL conf, read
+  * once, when the JVM first generates code with a session active;
+  * [[session]] and perfbench's session carry it from the first session.
   */
 object SparkTune {
   val conf: Map[String, String] = Map(
@@ -43,7 +70,9 @@ object SparkTune {
     // cluster this (or an external shuffle service TTL) is the same
     // knob that keeps 1000 executors' local disks bounded over a
     // multi-day crawl.
-    "spark.cleaner.periodicGC.interval" -> "2min")
+    "spark.cleaner.periodicGC.interval" -> "2min",
+    // one compile per generated class per JVM (see the Scaladoc above)
+    "spark.sql.codegen.cache.maxEntries" -> "4096")
 
   /** Local parallelism of an entry point: `SPARK_GRAFT_CPUS` when set,
     * else every core this JVM may use. */

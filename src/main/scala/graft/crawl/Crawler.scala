@@ -165,6 +165,7 @@ object Crawler {
 
     while (continue && state.round < maxRounds) {
       val t0 = System.nanoTime()
+      val codegen0 = graft.Prof.codegen()
       // first Bloom round (fresh start OR snapshot resume): shards are
       // built once from the full seen set here, then grown incrementally
       // per round below — never rebuilt from scratch again. The Bloom
@@ -304,7 +305,7 @@ object Crawler {
           f"[crawl] round ${state.round - 1}%3d fetched=${out.fetchedCount}%7d " +
           f"total=${state.totalFetched}%8d secs=${(System.nanoTime() - t0) / 1e9}%7.2f " +
           f"matchCalls=${graft.extract.EscoMatcher.callCount.sumThenReset()}%8d " +
-          graft.Prof.snapshotAndReset())
+          graft.Prof.codegenSince(codegen0) + " " + graft.Prof.snapshotAndReset())
       }
     }
     val allResults =

@@ -100,10 +100,6 @@ object EscoMatcher extends Serializable {
       labelOf.toMap, maxN)
   }
 
-  /** Match: tokenize normalized text, slide n-grams (1..maxN), collect
-    * distinct concept uris in first-hit order, then sort for determinism
-    * (reference sorts skill lists before compare,
-    * tests/test_compare_extracted_skills.py:29-33). */
   /** Diagnostic: total matchUris invocations in this JVM (local mode —
     * driver and executors share it). Lets the crawl round log report
     * calls/page and catch plan shapes that re-evaluate extraction.
@@ -111,6 +107,10 @@ object EscoMatcher extends Serializable {
     * AtomicLong from every task thread is measurable contention. */
   val callCount = new java.util.concurrent.atomic.LongAdder()
 
+  /** Match: tokenize normalized text, slide n-grams (1..maxN), collect
+    * distinct concept uris in first-hit order, then sort for determinism
+    * (reference sorts skill lists before compare,
+    * tests/test_compare_extracted_skills.py:29-33). */
   def matchUris(dict: Dict, text: String): Seq[String] = {
     if (graft.Prof.roundLog) callCount.increment()
     val tokens = normTokens(text)
