@@ -47,7 +47,7 @@ object Prof {
 
   /** Spark's Janino compiles in this JVM so far and their nanoseconds:
     * the misses of its generated-class cache (`SparkTune.conf`), the
-    * driver's and, in local mode, the executors' together. Call it with
+    * planner's and, in local mode, the executors' together. Call it with
     * a session active: a first call loads Spark's code generator, which
     * sizes its cache from the active session's conf. */
   def codegen(): (Long, Long) =

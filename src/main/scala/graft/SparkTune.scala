@@ -33,8 +33,8 @@ import org.apache.spark.sql.SparkSession
   * engine's working set:
   *
   *  - an entry is keyed by (class loader, source): in local mode every
-  *    class takes two, the driver's compile check and the executor
-  *    task's loader;
+  *    class takes two, the compile check at planning time and the
+  *    executor task's loader;
   *  - Guava splits the LRU into 4 segments that evict separately, so
   *    about 25 entries are live per segment;
   *  - a crawl round needs about 150 entries, the 8 queries perfbench
