@@ -57,49 +57,37 @@ object Bench {
     else (ok(ok.size / 2 - 1) + ok(ok.size / 2)) / 2.0
   }
 
+  /** The crawl legs' synthesized corpus (`Synth.pages` arguments). */
+  private val CrawlHosts = 200
+  private val CrawlBasePages = 24
+  private val CrawlRichness = 10
+
   /** Crawl throughput: fetch+dedup+extract urls/sec on a synthesized
-    * corpus (~2.5k pages, 200 hosts, skewed) — the north-star metric at
-    * sandbox scale.
+    * corpus (200 hosts, skewed; 4,487 pages fetched) — the north-star
+    * metric at sandbox scale.
     *
     * CONTRACT: this method ends by clearing the session's ENTIRE cache
     * manager (in-memory crawls retain each round's enriched cache as its
     * result slice, and those caches are reachable only through the
     * returned state) — any caller-held cached relations are dropped too.
-    * Callers that interleave query passes with crawl legs must re-cache
-    * (today's only callers run crawls after all query passes). */
-  def runCrawl(spark: SparkSession, nHosts: Int = 200,
-      basePages: Int = 24, richness: Int = 10,
-      roundMs: Long = 60000L, bloom: Boolean = false,
-      bucketed: Boolean = false,
-      snapshotDir: Option[String] = None): (Long, Double) = {
+    * `main` runs the crawl legs after all query passes. */
+  private def runCrawl(spark: SparkSession, bloom: Boolean): (Long, Double) = {
     implicit val s: SparkSession = spark
-    val pages0 = Synth.pages(spark, nHosts, basePages, richness).toDF()
-    val pages = (if (bucketed)
-        Crawler.bucketCorpus(pages0,
-          spark.sparkContext.defaultParallelism)
-      else pages0).cache()
+    val pages = Synth.pages(spark, CrawlHosts, CrawlBasePages, CrawlRichness)
+      .toDF().cache()
     pages.count() // materialize corpus outside the timed window
-    val robots = Synth.robots(spark, nHosts)
-    val seeds = Synth.seeds(spark, nHosts)
+    val robots = Synth.robots(spark, CrawlHosts)
+    val seeds = Synth.seeds(spark, CrawlHosts)
     val dict = Synth.escoLabels().map(l => (l.concept_uri, l.preferred_label))
-    // durable mode: every round commits frontier/seen/results/lineage to
-    // the snapshot dir (Iceberg-emulation parquet) INSIDE the timed
-    // window — the measured number is write-ahead crawl throughput. A
-    // fresh dir per call: this times the commit path, not a resume.
-    val snap = snapshotDir.map { d =>
-      new scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively()
-      new graft.crawl.Snapshot(d)
-    }
     val t0 = System.nanoTime()
     val (state, _, _) = Crawler.crawl(pages, robots, seeds, dict,
-      maxRounds = 60, roundMs = roundMs, snapshot = snap,
+      maxRounds = 60, roundMs = 60000L,
       bloomPrefilter = bloom, bloomCopartition = bloom,
       // benchmark Bloom legs run the filter at its scaling size (2 MiB —
       // ≥20 bits/key up to the 832k corpus) so the maybe-rate, and with
       // it the exact-verify join's left side, matches the design point
       // rather than the spec fixtures' deliberately tiny test filter
       bloomParams = graft.seen.BloomShard.scaleParams,
-      bucketedFetch = bucketed,
       // throughput legs never read the results: consume-and-release mode
       // keeps disk scratch at one round's working set (a retained slice
       // cache pins every shuffle file beneath its lineage — at the 3.3M

@@ -291,9 +291,4 @@ object Synth extends Serializable {
       graft.url.Robots.parse(host(h), robotsTxt(h))
     }.toDS()
   }
-
-  def escoDs(spark: SparkSession): Dataset[EscoLabel] = {
-    import spark.implicits._
-    escoLabels().toDS()
-  }
 }

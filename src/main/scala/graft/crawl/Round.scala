@@ -183,12 +183,6 @@ object Round {
         pages.alias("p").join(sel, col("f.url") === col("p.url"))
       else pages.alias("p")
         .join(broadcast(sel), col("f.url") === col("p.url")))
-      .transform { df =>
-        if (planLog) System.err.println(
-          s"[plan round $roundNo] fetch join:\n" +
-          df.queryExecution.sparkPlan.toString.take(planLimit))
-        df
-      }
       // column discipline: the corpus `text` column is NOT selected —
       // extraction recomputes it from html (byte-identity is the tested
       // invariant), and an unused heavy column here would be decompressed
@@ -223,13 +217,6 @@ object Round {
         col("sig._2").as("minhash"), col("sig._3").as("lang_pred"),
         col("sig._4").as("n_tokens"))
       .as[CrawlResult]
-    if (planLog) {
-      val p = results.queryExecution.executedPlan.toString
-      System.err.println(s"[plan round $roundNo] results UDF counts: " +
-        Seq("UDF", "extract", "matchUris", "anonfun").map(k =>
-          s"$k=${p.sliding(k.length).count(_ == k)}").mkString(" ") +
-        s" planLen=${p.length}")
-    }
 
     // per-partition lineage counters (SDK_CRAWLER_STATISTICS analog).
     // Collecting them (≤ one row per partition) IS the round's single
@@ -242,10 +229,6 @@ object Round {
     if (graft.Prof.roundLog) System.err.println(
       f"[round $roundNo%3d] fetch+extract action: " +
       f"${(System.nanoTime() - tRoundStart) / 1e9}%7.2f s")
-    if (planLog) System.err.println(
-      s"[plan round $roundNo] results EXECUTED:\n" +
-      results.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head.take(6000))
 
     // 5. link scrape → new frontier candidates (same-host only,
     //    apify.js:156-163), depth+1, dedup'd against seen ∪ this round.
@@ -305,18 +288,11 @@ object Round {
       }
   }
 
-  /** Plan diagnostics, read once per JVM: `GRAFT_PLAN_LOG=1` prints the
-    * round's physical plans (`GRAFT_PLAN_FULL` set raises the fetch-join
-    * print limit). The per-round timings, `GRAFT_ROUND_LOG`, are
-    * [[graft.Prof.roundLog]]. */
-  private val planLog = sys.env.get("GRAFT_PLAN_LOG").contains("1")
-  private val planLimit = sys.env.get("GRAFT_PLAN_FULL").fold(2000)(_ => 20000)
-
   /** Dedup signatures and language of a page's text: simhash, minhash,
     * detected language and token count. Each token is hashed exactly
     * once; simhash and shingle/minhash derive from the primitive hash
     * array (no per-shingle strings, no boxed sets). */
-  val signatures = udf((text: String) => graft.Prof.time("sig") {
+  private val signatures = udf((text: String) => graft.Prof.time("sig") {
     val toks = graft.dedup.Dedup.tokens(text)
     val hs = graft.dedup.Dedup.tokenHashes(toks)
     (graft.dedup.Dedup.simhashOfHashes(hs),

@@ -137,15 +137,9 @@ object EscoMatcher extends Serializable {
     hits.toSeq
   }
 
-  /** UDF pair over a broadcast dict: text → sorted concept uris / labels. */
+  /** UDF over a broadcast dict: text → sorted concept uris. */
   def matcherUdf(bc: Broadcast[Dict]): Column => Column = {
     val f = udf((text: String) => graft.Prof.time("match")(matchUris(bc.value, text)))
-    c => f(c)
-  }
-
-  def labelsUdf(bc: Broadcast[Dict]): Column => Column = {
-    val f = udf((text: String) =>
-      matchUris(bc.value, text).map(u => bc.value.labelOf(u)).sorted)
     c => f(c)
   }
 

@@ -265,11 +265,8 @@ object Ratio extends Serializable {
   val ratioUdf = udf((a: String, b: String) => ratio(a, b))
   val partialRatioUdf = udf((a: String, b: String) => partialRatio(a, b))
   val tokenSetRatioUdf = udf((a: String, b: String) => tokenSetRatio(a, b))
-  val tokenSortRatioUdf = udf((a: String, b: String) => tokenSortRatio(a, b))
-  val ratioRawUdf = udf((a: String, b: String) => ratioRaw(a, b))
 
   def fuzzRatio(a: Column, b: Column): Column = ratioUdf(a, b)
   def fuzzPartialRatio(a: Column, b: Column): Column = partialRatioUdf(a, b)
   def fuzzTokenSetRatio(a: Column, b: Column): Column = tokenSetRatioUdf(a, b)
-  def fuzzTokenSortRatio(a: Column, b: Column): Column = tokenSortRatioUdf(a, b)
 }

@@ -31,7 +31,8 @@ object BloomShard {
   final case class Params(numShards: Int, bitsPerShard: Int, k: Int)
   val testParams: Params = Params(16, 1 << 16, 7)
 
-  /** Scaling-corpus params (ScalingBench/Bench GRAFT_BLOOM legs):
+  /** Scaling-corpus params (the Bloom legs of `Bench`, `CrawlMain`
+    * under `GRAFT_BLOOM=1` and perfbench's crawl workload):
     * 64 shards × 2^18 bits ≈ 16.8 Mbit (2 MiB of filter). At the 208k-url
     * corpus that is ~80 bits/key (maybe-rate ≈ 3e-8); at the 832k 4×
     * corpus ~20 bits/key (≈ 2e-4) — the exact verify join sees only true

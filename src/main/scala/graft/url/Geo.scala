@@ -52,8 +52,4 @@ object Geo {
       try_element_at(tldMap, substring(h, -2, 2)))
     coalesce(tldHit, special)
   }
-
-  /** Country of a URL column (host-extract then TLD map). */
-  def countryOfUrl(url: Column): Column =
-    countryOfHost(Canonical.urlHost(url))
 }

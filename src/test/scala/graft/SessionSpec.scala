@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 
 /** Every session is built by `SparkTune.session`: the specs' session
   * carries its settings, and no main-source file but `SparkTune.scala`
-  * calls `SparkSession.builder`. */
+  * calls `SparkSession.builder`. The env vars the main sources read are
+  * pinned by name and file. */
 class SessionSpec extends SparkSpec {
 
   test("the spec session carries the factory's settings") {
@@ -22,15 +23,43 @@ class SessionSpec extends SparkSpec {
       SparkSpec.Cores.toString)
   }
 
-  test("SparkSession.builder appears only in SparkTune.scala") {
+  /** The main sources, as (path relative to `src/main/scala`, text). */
+  private def mainSources: Seq[(String, String)] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: $root")
     val files = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 10, "the main sources were not found")
-    def builds(p: Path) =
-      new String(Files.readAllBytes(p), "UTF-8").contains("SparkSession.builder")
-    val sites = files.filter(builds).map(root.relativize(_).toString).sorted
+    files.map(p => root.relativize(p).toString ->
+      new String(Files.readAllBytes(p), "UTF-8"))
+  }
+
+  test("SparkSession.builder appears only in SparkTune.scala") {
+    val sites = mainSources.collect {
+      case (f, text) if text.contains("SparkSession.builder") => f
+    }.sorted
     assert(sites === Seq("graft/SparkTune.scala"))
+  }
+
+  test("knob inventory: the main sources read seven env vars, each at " +
+      "one site") {
+    val anyRead = """sys\.env|System\.getenv""".r
+    val namedRead =
+      """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\(\s*"(\w+)"""".r
+    val sites = mainSources.flatMap { case (f, text) =>
+      val named = namedRead.findAllMatchIn(text).map(_.group(1)).toSeq
+      // a read whose name is not a literal would escape the inventory
+      assert(anyRead.findAllMatchIn(text).size === named.size,
+        s"$f reads an env var by a computed name")
+      named.map(_ -> f.split('/').last)
+    }.sortBy(_._1)
+    assert(sites === Seq(
+      "GRAFT_BENCH_REPS" -> "Bench.scala",
+      "GRAFT_BLOOM" -> "CrawlMain.scala",
+      "GRAFT_BUCKETED" -> "CrawlMain.scala",
+      "GRAFT_CRAWL_REPS" -> "Bench.scala",
+      "GRAFT_ROUND_LOG" -> "Prof.scala",
+      "SPARK_GRAFT_CPUS" -> "SparkTune.scala",
+      "SPARK_GRAFT_SF_DIR" -> "Bench.scala"))
   }
 }

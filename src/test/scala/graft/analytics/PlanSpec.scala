@@ -169,8 +169,8 @@ class PlanSpec extends SparkSpec {
   test("no-broadcast regime (beyond-broadcast seen set): the exact " +
       "anti-join becomes a shuffle join, the Bloom verify join's left " +
       "side is only the maybe-seen sliver, and bounded-table hints survive") {
-    // The GRAFT_NOBC measurement knob (ScalingBench) emulates a seen set
-    // too big to broadcast by disabling AUTOMATIC broadcast conversion.
+    // A seen set too big to broadcast is emulated here by disabling
+    // AUTOMATIC broadcast conversion (threshold -1, AQE off, below).
     // BASELINE.md's break-even legs rest on three plan claims — pin them:
     // (1) the exact leg's frontier × seen anti-join is a shuffle join
     //     (the full-shuffle-per-round cost the model charges it);
