@@ -52,6 +52,16 @@ import org.apache.spark.sql.SparkSession
   * 207.1 → 211.3 MB for `graft.Bench`. It is a static SQL conf, read
   * once, when the JVM first generates code with a session active;
   * [[session]] and perfbench's session carry it from the first session.
+  *
+  * `spark.sql.codegen.useIdInClassName=false` — keeps the codegen stage
+  * number out of the generated class's name
+  * (`GeneratedIteratorForCodegenStage<N>`), and so out of the cache key.
+  * AQE numbers a query's codegen stages in the order it creates them,
+  * which follows the order concurrent shuffle stages finish; a warm pass
+  * that finished them in another order compiled its stages again under
+  * new numbers (CodegenCacheSpec: up to 13 compiles over 12 warm passes
+  * of perfbench's 8 queries). The number is only a label: the stage id
+  * still appears in the plan and its metrics.
   */
 object SparkTune {
   val conf: Map[String, String] = Map(
@@ -72,7 +82,8 @@ object SparkTune {
     // multi-day crawl.
     "spark.cleaner.periodicGC.interval" -> "2min",
     // one compile per generated class per JVM (see the Scaladoc above)
-    "spark.sql.codegen.cache.maxEntries" -> "4096")
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   /** Local parallelism of an entry point: `SPARK_GRAFT_CPUS` when set,
     * else every core this JVM may use. */

@@ -1,6 +1,7 @@
 package graft.corpus
 
 import java.sql.Timestamp
+import java.util.Locale
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.model.{EscoLabel, Page, RobotsRule, Seed}
 import scala.collection.mutable
@@ -218,13 +219,13 @@ object Synth extends Serializable {
     val raw = (narrative ++ tableLines ++ kvLines)
       .map(_.replaceAll("[ \t]{2,}", " ").trim)
       .filter(_.nonEmpty)
-      .filterNot(_.toLowerCase.contains("skip to content"))
+      .filterNot(_.toLowerCase(Locale.ROOT).contains("skip to content"))
     val seenLines = mutable.HashSet.empty[String]
-    val dedup = raw.filter(l => seenLines.add(l.toLowerCase))
+    val dedup = raw.filter(l => seenLines.add(l.toLowerCase(Locale.ROOT)))
     val seenPhrases = mutable.HashSet.empty[String]
     dedup.iterator.map { line =>
       line.split("(?<=[.!?]) ").iterator
-        .filter(s => seenPhrases.add(s.toLowerCase))
+        .filter(s => seenPhrases.add(s.toLowerCase(Locale.ROOT)))
         .mkString(" ")
     }.filter(_.nonEmpty).mkString("\n")
   }

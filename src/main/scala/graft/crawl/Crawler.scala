@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.extract.EscoMatcher
 import graft.frontier.Frontier
 import graft.model._
+import graft.util.Overlap
 
 /** The driver-side round loop: iterative BFS with a persistent queue —
   * the reference's crawl lifecycle (/root/reference/crawler.py:4-36 +
@@ -33,8 +34,9 @@ object Crawler {
       frontier: Dataset[FrontierEntry],
       seenHashes: DataFrame, // url_hash: Long
       totalFetched: Long,
-      // Bloom-prefilter runs only: the seen-set shards, maintained
-      // INCREMENTALLY (prev shards OR'd with the round slice's shards —
+      // Bloom-prefilter runs only: the seen-set shards (in snapshot
+      // mode, the committed `shards` table), maintained INCREMENTALLY
+      // (prev shards OR'd with the round slice's shards —
       // O(slice) hashing + a ≤2×numShards-row merge per round). The
       // former rebuild-from-scratch inside each round hashed the ENTIRE
       // seen set every round: O(total) per round, O(rounds × total)
@@ -58,8 +60,14 @@ object Crawler {
     val frontier = Frontier.robotsGate(Frontier.fromUrls(seeded,
       graft.corpus.Synth.priorityKeywords,
       graft.corpus.Synth.excludeKeywords), robots)
+    // a local relation, so that planning knows it is empty: round 0's
+    // candidate anti-join against (seen ∪ the round's fetches) is then
+    // planned as a broadcast join. Over an RDD of unknown size it was a
+    // sort-merge join that AQE turned into a broadcast join only when
+    // the fetched side's stage finished first, and the candidate side's
+    // shuffle stage ran or not (one job more or less) by stage timing.
     val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("url_hash",
           org.apache.spark.sql.types.LongType))))
@@ -127,6 +135,12 @@ object Crawler {
       : (CrawlState, Dataset[CrawlResult], Dataset[Lineage]) = {
     import spark.implicits._
     val dict = EscoMatcher.broadcastDict(spark, dictLabels)
+    // the layout of the seen filter, committed as the `shards_layout`
+    // counter beside a snapshot's `shards` table: a resume reads the
+    // table back only under the same layout
+    val shardLayout: Long =
+      (if (cuckooSeen) s"cuckoo $cuckooParams" else s"bloom $bloomParams")
+        .hashCode.toLong
 
     // a resume whose last committed round enqueued nothing is drained
     var continue = true
@@ -138,16 +152,22 @@ object Crawler {
         CrawlState(r + 1,
           s.read(r, "frontier").as[FrontierEntry],
           s.read(r, "seen"),
-          counters.getOrElse("total_fetched", 0L))
+          counters.getOrElse("total_fetched", 0L),
+          Option.when(bloomPrefilter &&
+              counters.get("shards_layout").contains(shardLayout))(
+            s.read(r, "shards").as[SeenShard]))
       case None =>
         val s0 = initialState(seeds, pages, robots)
         // checkpoint the seed frontier like every later round's: its
         // plan embeds a seeds ⋈ pages join, and round 0 otherwise
         // re-executes that corpus scan in every plan that references
         // the frontier (measured: ~10 corpus scans + 2.8M redundant
-        // canonicalize calls in round 0 at the 265k-page bench corpus)
-        s0.copy(frontier =
-          s0.frontier.toDF().localCheckpoint(true).as[FrontierEntry])
+        // canonicalize calls in round 0 at the 265k-page bench corpus).
+        // The seen set is empty, and so are its shards: round 0 grows
+        // them from none (no build job over an empty set)
+        s0.copy(
+          frontier = s0.frontier.toDF().localCheckpoint(true).as[FrontierEntry],
+          seenShards = Option.when(bloomPrefilter)(spark.emptyDataset[SeenShard]))
     })
     // per-round result/lineage slices: each round's slice is already
     // cached (Round.run) or snapshot-backed; they union lazily at the
@@ -166,21 +186,21 @@ object Crawler {
     while (continue && state.round < maxRounds) {
       val t0 = System.nanoTime()
       val codegen0 = graft.Prof.codegen()
-      // first Bloom round (fresh start OR snapshot resume): shards are
-      // built once from the full seen set here, then grown incrementally
-      // per round below — never rebuilt from scratch again. The Bloom
-      // build is the per-round growth step from no shards (bit-identical
-      // to BloomShard.build, FiltersSpec): 8 bytes shuffled per hash,
-      // where build's map-side combine shuffles up to one partial bitset
-      // per shard and map task, and no second code path to warm up.
+      // a start with a seen set but no shards (a resume from a snapshot
+      // without its `shards` table or under another layout, a
+      // `startState` without them): build them once from the full seen
+      // set here, then grow them per round below. The Bloom build is the
+      // per-round growth step from no shards (bit-identical to
+      // BloomShard.build, FiltersSpec): 8 bytes shuffled per hash, where
+      // build's map-side combine shuffles up to one partial bitset per
+      // shard and map task, and no second code path to warm up.
       if (bloomPrefilter && state.seenShards.isEmpty)
         state = state.copy(seenShards = Some(
           (if (cuckooSeen)
             graft.seen.CuckooShard.build(state.seenHashes, cuckooParams)
-              .toDF().as[graft.model.SeenShard]
+              .toDF().as[SeenShard]
           else graft.seen.BloomShard.grow(
-            spark.emptyDataset[graft.model.SeenShard], state.seenHashes,
-            bloomParams))
+            spark.emptyDataset[SeenShard], state.seenHashes, bloomParams))
             .localCheckpoint(true)))
       val probeParams =
         if (cuckooSeen) cuckooParams.probeParams else bloomParams
@@ -225,15 +245,16 @@ object Crawler {
         // running set (see CrawlState.seenShards) — O(slice), not O(seen),
         // one cogroup of the previous shards with the slice's hashes.
         // Cuckoo backend: insertAll (insertion isn't associative like
-        // Bloom's OR, so the slice cogroups into the shard table instead)
-        val newShards = state.seenShards.map(prev =>
-          (if (cuckooSeen)
+        // Bloom's OR, so the slice cogroups into the shard table instead).
+        // Materialized like the seen union: written to the snapshot, or
+        // checkpointed in memory.
+        val grown = state.seenShards.map(prev =>
+          if (cuckooSeen)
             graft.seen.CuckooShard.insertAll(prev,
               slice.select("url_hash").toDF(), cuckooParams)
-              .toDF().as[graft.model.SeenShard]
+              .toDF().as[SeenShard]
           else graft.seen.BloomShard.grow(prev,
             slice.select("url_hash").toDF(), bloomParams))
-            .localCheckpoint(true))
         val newTotal = state.totalFetched + out.fetchedCount
         // materialize the next frontier ONCE (it feeds every join of the
         // next round) — the LAZY checkpoint is triggered by the count
@@ -243,44 +264,63 @@ object Crawler {
         // partial-count exchange, one more job. new_links = entries
         // enqueued for the next round (discovered + deferred + retries),
         // recorded on the lowest-numbered partition's row.
-        val fr = out.nextFrontier.toDF().localCheckpoint(false)
-        val enqueued = fr.queryExecution.toRdd.count()
-        val patchedLineage = {
+        def nextFrontier(): (DataFrame, Long, Dataset[Lineage]) = {
+          val fr = out.nextFrontier.toDF().localCheckpoint(false)
+          val enqueued = fr.queryExecution.toRdd.count()
           val rows = out.lineage.collect() // LocalRelation — driver-local
           val minP = rows.map(_.partition_id).min
-          spark.createDataset(rows.map(r =>
+          (fr, enqueued, spark.createDataset(rows.map(r =>
             if (r.partition_id == minP) r.copy(new_links = enqueued)
-            else r).toSeq)
+            else r).toSeq))
         }
+        // the round's tail: the seen set, the shards and the results
+        // slice do not depend on the next frontier, so they start to
+        // materialize as soon as the round action returns, and run while
+        // this thread materializes the frontier
         val prev = state
-        snapshot match {
+        val enqueued = snapshot match {
           case Some(s) =>
             // append-only commit: ONLY this round's results/lineage slice
             // is written (the manifest accumulates slice paths) — write
-            // volume per round is O(slice), not O(total); frontier and
-            // seen are full-state replacements like Iceberg overwrites
-            s.write(state.round,
-              tables = Map("frontier" -> fr, "seen" -> seenUnion),
-              counters = Map("total_fetched" -> newTotal,
+            // volume per round is O(slice), not O(total); frontier, seen
+            // and shards are full-state replacements like Iceberg
+            // overwrites. The commit joins every write before the
+            // manifest.
+            val commit = s.begin(state.round)
+              .replace("seen", seenUnion)
+              .append("results", slice.toDF())
+            grown.foreach(g => commit.replace("shards", g.toDF()))
+            val (fr, enqueued, lineage) = commit.alongside(nextFrontier())
+            commit.replace("frontier", fr).append("lineage", lineage.toDF())
+              .commit(Map("total_fetched" -> newTotal,
                 "round_fetched" -> out.fetchedCount,
-                "new_links" -> enqueued),
-              appends = Map("results" -> slice.toDF(),
-                "lineage" -> patchedLineage.toDF()))
+                "new_links" -> enqueued) ++
+                grown.map(_ => "shards_layout" -> shardLayout))
             // hold the parquet-backed slice (not the cache, which is
             // released below); plans stay flat — one scan per slice
             resultSlices += s.readSlice(state.round, "results").as[CrawlResult]
             lineageSlices += s.readSlice(state.round, "lineage").as[Lineage]
             state = CrawlState(state.round + 1,
               s.read(state.round, "frontier").as[FrontierEntry],
-              s.read(state.round, "seen"), newTotal, newShards)
+              s.read(state.round, "seen"), newTotal,
+              grown.map(_ => s.read(state.round, "shards").as[SeenShard]))
             // the state re-reads the committed frontier: the checkpoint
             // that fed the write is dead
             graft.util.Checkpoints.release(fr)
+            enqueued
           case None =>
+            // checkpoints of the seen union and the grown shards
+            val tail = (seenUnion +: grown.map(_.toDF()).toSeq)
+              .map(df => Overlap.start(df.localCheckpoint(true)))
+            val (fr, enqueued, lineage) =
+              Overlap.alongside(tail)(nextFrontier())
+            val checkpoints = Overlap.join(tail)
             if (retainResults) resultSlices += slice
-            lineageSlices += patchedLineage
+            lineageSlices += lineage
             state = CrawlState(state.round + 1, fr.as[FrontierEntry],
-              seenUnion.localCheckpoint(true), newTotal, newShards)
+              checkpoints.head, newTotal,
+              checkpoints.drop(1).headOption.map(_.as[SeenShard]))
+            enqueued
         }
         // the superseded round inputs (old frontier / seen / shards) are
         // fully consumed above — release their checkpoint blocks NOW:
@@ -288,8 +328,9 @@ object Crawler {
         // waiting for ContextCleaner pins every dead round's blocks for
         // a nondeterministic time inside the measured window (a 60-round
         // Bloom crawl would otherwise hold ~2 MiB of dead shard bitsets
-        // per round). Snapshot-mode frontier/seen are parquet reads —
-        // release is a no-op there; shards are checkpointed in both modes.
+        // per round). Snapshot-mode frontier/seen/shards are parquet
+        // reads — release is a no-op there, bar a first round's
+        // checkpointed seed frontier and rebuilt shards.
         graft.util.Checkpoints.release(prev.frontier)
         graft.util.Checkpoints.release(prev.seenHashes)
         prev.seenShards.foreach(graft.util.Checkpoints.release)

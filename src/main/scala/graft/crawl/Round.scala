@@ -29,11 +29,13 @@ import graft.url.Canonical
   * so the round joins the robots rules once, for the budgets, and a
   * frontier of only disallowed links never exists to cost a round.
   *
-  * Job census of a steady snapshot-mode round with the co-partitioned
-  * Bloom seen set — 23 Spark jobs on the CrawlerSpec fixture, where its
-  * CI guard pins that bound (30 before the zero-job snapshot reads,
-  * one-pass seen commit and exchange-free lineage). Under AQE each query
-  * stage is one job:
+  * Job census of a snapshot-mode round with the co-partitioned Bloom
+  * seen set — 23 Spark jobs on the CrawlerSpec fixture in round 0, in a
+  * steady round and in a resumed call's first round alike; its CI guard
+  * pins that bound (30 before the zero-job snapshot reads, one-pass seen
+  * commit and exchange-free lineage; round 0 and a resumed round ran 25,
+  * building shards from the seen set). Under AQE each query stage is one
+  * job:
   *
   *  - the round action, `lineageOf(results).collect` (11): the Bloom
   *    cogroup's frontier and shard exchanges and the flagged-frontier
@@ -42,14 +44,16 @@ import graft.url.Canonical
   *    the selected-set broadcast and the enriched cache (the corpus is
   *    never shuffled); the collect itself — the lineage counters are a
   *    narrow pass over the enriched cache;
-  *  - Crawler, shard growth (3): `BloomShard.grow`'s two cogroup
-  *    exchanges and its checkpoint;
-  *  - Crawler, next frontier (5): the candidate anti-join and merge
-  *    stages behind the frontier checkpoint (4) and the enqueue count
-  *    over the checkpoint (1);
-  *  - Snapshot.write (4): frontier, seen, results slice and lineage
-  *    slice, written concurrently; the read-back is free (the manifest
-  *    carries the schemas).
+  *  - the round's tail, started as soon as the action returns and run
+  *    concurrently (Crawler): the seen and results-slice writes (2) and
+  *    shard growth, `BloomShard.grow`'s two cogroup exchanges and the
+  *    `shards` write (3);
+  *  - alongside it, the next frontier (5): the candidate anti-join and
+  *    merge stages behind the frontier checkpoint (4) and the enqueue
+  *    count over the checkpoint (1); then the frontier and lineage-slice
+  *    writes (2). The manifest commits once every write finished; the
+  *    read-back is free (the manifest carries the schemas), and the next
+  *    round or a resume reads the committed shards back.
   *
   * Dimension tables (robots, budgets, ESCO dict) and the budget-bounded
   * selected set are broadcast.

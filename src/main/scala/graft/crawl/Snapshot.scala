@@ -5,9 +5,10 @@ import java.nio.file.{Files, Path, Paths}
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.collection.mutable
+import scala.concurrent.Future
 import scala.jdk.CollectionConverters._
+import graft.util.Overlap
 
 /** Snapshot/manifest layer — Iceberg-emulation (SURVEY.md §7.0).
   *
@@ -16,15 +17,22 @@ import scala.jdk.CollectionConverters._
   * exact resume — are provided by a minimal manifest layer over
   * partitioned Parquet:
   *
-  *   {base}/round=N/{frontier,seen,results,lineage}/  (parquet dirs)
+  *   {base}/round=N/{frontier,seen,shards,results,lineage}/  (parquet)
   *   {base}/manifest_N.json
   *     {"round":N,"tables":{...},"appends":{...},"schemas":{...},
   *      "counters":{...}}
   *
   * Two table kinds, mirroring Iceberg's overwrite vs append commits:
   *
-  *  - REPLACED tables (frontier, seen): each round writes the full new
-  *    state under its own round dir; the manifest points at it.
+  *  - REPLACED tables (frontier, seen, shards): each round writes the
+  *    full new state under its own round dir; the manifest points at it.
+  *    `shards` is the seen set's filter (`SeenShard` rows), written only
+  *    by a crawl with a seen filter, together with the
+  *    `shards_layout` counter that names the layout it was built with
+  *    (`Crawler.crawl`). A resume reads it back instead of re-hashing
+  *    `seen`; a manifest without it (an exact-backend crawl, a snapshot
+  *    written before the table existed) or with another layout resumes
+  *    by rebuilding the shards from `seen`.
   *  - APPENDED tables (results, lineage): each round writes ONLY its
   *    slice under round=N/name; the manifest carries the cumulative
   *    slice-path list (previous manifest's list + this round's path), and
@@ -60,19 +68,23 @@ final class Snapshot(base: String)(implicit spark: SparkSession) {
   def write(round: Int, tables: Map[String, DataFrame],
       counters: Map[String, Long],
       appends: Map[String, DataFrame] = Map.empty): Unit = {
-    require(tables.keySet.intersect(appends.keySet).isEmpty,
-      s"a table is both replaced and appended: ${tables.keySet & appends.keySet}")
+    val c = begin(round)
+    tables.foreach { case (n, df) => c.replace(n, df) }
+    appends.foreach { case (n, df) => c.append(n, df) }
+    c.commit(counters)
+  }
+
+  /** Open a round's commit. Every table added to it starts writing at
+    * once, on its own thread (the tables are independent, so the fixed
+    * per-write costs overlap); `commit` waits for every write before it
+    * rethrows a failure or writes the manifest. The crawl adds the tables
+    * that do not depend on the next frontier first and materializes the
+    * frontier while they write. */
+  def begin(round: Int): Snapshot.Commit = new Snapshot.Commit(round, this)
+
+  private def commitManifest(round: Int, tables: Map[String, DataFrame],
+      appends: Map[String, DataFrame], counters: Map[String, Long]): Unit = {
     Files.createDirectories(Paths.get(base))
-    // the tables are independent: write them concurrently so their fixed
-    // per-write costs (job launch, output commit) overlap. One new thread
-    // per write inherits the caller's Spark local properties; every write
-    // finishes before a failure is rethrown or the manifest commits.
-    val writes = (tables ++ appends).toSeq.map { case (name, df) =>
-      Future(df.write.mode(SaveMode.Overwrite).parquet(dir(round, name)))(
-        Snapshot.threadPerTask)
-    }
-    writes.foreach(Await.ready(_, Duration.Inf))
-    writes.foreach(_.value.get.get)
     val prev = latest()
     val (prevAppends, prevSchemas) =
       if (prev < 0 || prev >= round) (Map.empty[String, Seq[String]],
@@ -169,6 +181,39 @@ final class Snapshot(base: String)(implicit spark: SparkSession) {
 object Snapshot {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private val threadPerTask: ExecutionContext =
-    ExecutionContext.fromExecutor((r: Runnable) => new Thread(r).start())
+  /** One round's commit in progress (see [[Snapshot.begin]]). */
+  final class Commit private[Snapshot] (round: Int, snap: Snapshot) {
+    private val tables = mutable.LinkedHashMap.empty[String, DataFrame]
+    private val appends = mutable.LinkedHashMap.empty[String, DataFrame]
+    private val writes = mutable.ArrayBuffer.empty[Future[Unit]]
+
+    /** Start writing the full state of a replaced table. */
+    def replace(name: String, df: DataFrame): this.type =
+      start(name, df, tables)
+
+    /** Start writing this round's slice of an appended table. */
+    def append(name: String, df: DataFrame): this.type =
+      start(name, df, appends)
+
+    private def start(name: String, df: DataFrame,
+        kind: mutable.Map[String, DataFrame]): this.type = {
+      require(!tables.contains(name) && !appends.contains(name),
+        s"table $name is written twice in round $round")
+      kind(name) = df
+      writes += Overlap.start(
+        df.write.mode(SaveMode.Overwrite).parquet(snap.dir(round, name)))
+      this
+    }
+
+    /** Run `body` while the started writes run; when it throws, the
+      * writes finish before the failure propagates. */
+    def alongside[T](body: => T): T = Overlap.alongside(writes.toSeq)(body)
+
+    /** Wait for every write, rethrow the first failure, then commit the
+      * round's manifest. */
+    def commit(counters: Map[String, Long]): Unit = {
+      Overlap.join(writes.toSeq)
+      snap.commitManifest(round, tables.toMap, appends.toMap, counters)
+    }
+  }
 }

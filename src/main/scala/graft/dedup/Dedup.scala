@@ -1,5 +1,6 @@
 package graft.dedup
 
+import java.util.Locale
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -92,7 +93,7 @@ object Dedup {
     * (BASELINE.md cliff notes). */
   def tokens(text: String): Array[String] =
     if (text == null) Array.empty
-    else text.toLowerCase.trim.split("\\s+").filter(_.nonEmpty)
+    else text.toLowerCase(Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty)
 
   /** 3-token shingle set of a document (lowercased, whitespace-split). */
   def shingles(text: String): Set[Long] = shinglesOf(tokens(text))

@@ -1,6 +1,7 @@
 package graft.extract
 
 import java.nio.charset.StandardCharsets
+import java.util.Locale
 import java.util.regex.Pattern
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
@@ -141,7 +142,7 @@ object TextExtract extends Serializable {
     val tableRows = mutable.ArrayBuffer.empty[String]
     val kvLines = mutable.ArrayBuffer.empty[String]
     for (m <- blockRx.findAllMatchIn(scope)) {
-      val tag = m.group(1).toLowerCase
+      val tag = m.group(1).toLowerCase(Locale.ROOT)
       val inner = m.group(2)
       tag match {
         case "tr" =>
@@ -167,18 +168,18 @@ object TextExtract extends Serializable {
     val raw = (narrative ++ tableRows ++ kvLines).iterator
       .map(collapseSpaceTab)
       .filter(_.nonEmpty)
-      .filterNot(_.toLowerCase.contains("skip to content"))
+      .filterNot(_.toLowerCase(Locale.ROOT).contains("skip to content"))
       .toSeq
 
     // 8: line dedup (ci, first wins)
     val seenLines = mutable.HashSet.empty[String]
-    val dedupLines = raw.filter(l => seenLines.add(l.toLowerCase))
+    val dedupLines = raw.filter(l => seenLines.add(l.toLowerCase(Locale.ROOT)))
 
     // 9: phrase dedup across the doc
     val seenPhrases = mutable.HashSet.empty[String]
     val out = dedupLines.iterator.map { line =>
       sentencePat.split(line).iterator
-        .filter(s => seenPhrases.add(s.toLowerCase))
+        .filter(s => seenPhrases.add(s.toLowerCase(Locale.ROOT)))
         .mkString(" ")
     }.filter(_.nonEmpty).toSeq
 

@@ -1,6 +1,7 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.util.Locale
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model.{FrontierEntry, RobotsRule}
@@ -35,19 +36,30 @@ object Frontier {
   val Cols: Seq[String] = Seq("url", "url_hash", "host", "priority",
     "warc_ts", "depth", "retry_count")
 
+  /** True when `url`, lowercased under `Locale.ROOT`, contains any of
+    * `keywords` (false for a null url). Equal to Spark's
+    * `lower(url).contains(k)` for every keyword without σ or ς
+    * (FrontierSpec; Java and ICU differ only in where a Greek sigma is
+    * final), without `lower`'s ICU case mapping, whose class
+    * initialization cost about 1 s of driver time in a JVM's first crawl
+    * call. */
+  def containsAny(keywords: Seq[String]): String => Boolean = {
+    val kws = keywords.toArray
+    url => url != null && {
+      val low = url.toLowerCase(Locale.ROOT)
+      kws.exists(low.contains)
+    }
+  }
+
   /** Priority of a URL: 1 if it contains any priority keyword, 0 otherwise
-    * (/root/reference/apify.js:44-47). Pure column expression — stays in
-    * codegen, no UDF. */
-  def priorityCol(urlCol: org.apache.spark.sql.Column,
-      keywords: Seq[String]): org.apache.spark.sql.Column =
-    when(keywords.map(k => lower(urlCol).contains(k))
-      .reduce(_ || _), lit(1)).otherwise(lit(0))
+    * (the reference crawler, apify.js:44-47). */
+  def priorityCol(urlCol: Column, keywords: Seq[String]): Column =
+    when(udf(containsAny(keywords)).apply(urlCol), lit(1)).otherwise(lit(0))
 
   /** True when the URL contains an exclude keyword
     * (/root/reference/apify.js:48-51). */
-  def excludedCol(urlCol: org.apache.spark.sql.Column,
-      keywords: Seq[String]): org.apache.spark.sql.Column =
-    keywords.map(k => lower(urlCol).contains(k)).reduce(_ || _)
+  def excludedCol(urlCol: Column, keywords: Seq[String]): Column =
+    udf(containsAny(keywords)).apply(urlCol)
 
   /** Make frontier entries from candidate URLs: canonicalize, hash,
     * host-extract, score priority. Input df needs columns

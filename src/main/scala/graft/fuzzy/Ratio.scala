@@ -1,5 +1,6 @@
 package graft.fuzzy
 
+import java.util.Locale
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 import scala.collection.mutable
@@ -232,10 +233,10 @@ object Ratio extends Serializable {
   }
 
   private def tokenSet(s: String): Set[String] =
-    s.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSet
+    s.toLowerCase(Locale.ROOT).split("[^a-z0-9]+").filter(_.nonEmpty).toSet
 
   private def tokenList(s: String): Seq[String] =
-    s.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSeq
+    s.toLowerCase(Locale.ROOT).split("[^a-z0-9]+").filter(_.nonEmpty).toSeq
 
   /** fuzz.token_set_ratio: sort-join the token-set intersection and
     * differences, take the max pairwise ratio (fuzzywuzzy SE semantics). */

@@ -1,5 +1,6 @@
 package graft.text
 
+import java.util.Locale
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Tables
@@ -149,7 +150,7 @@ object TextStats {
           } else run = false
         }
         if (j - i <= MaxMarkerLen || dottedI) {
-          val low = text.substring(i, j).toLowerCase
+          val low = text.substring(i, j).toLowerCase(Locale.ROOT)
           if (!dottedI) countMask(MarkerMask.get(low), counts)
           else low.split("[^\\p{L}]+").foreach(p =>
             if (p.nonEmpty) countMask(MarkerMask.get(p), counts))

@@ -1,5 +1,6 @@
 package graft.url
 
+import java.util.Locale
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
@@ -33,7 +34,7 @@ object Canonical extends Serializable {
     }
     val schemeEnd = noFrag.indexOf("://")
     if (schemeEnd <= 0) return noFrag
-    val scheme = noFrag.substring(0, schemeEnd).toLowerCase
+    val scheme = noFrag.substring(0, schemeEnd).toLowerCase(Locale.ROOT)
     val rest = noFrag.substring(schemeEnd + 3)
     val slash = rest.indexOf('/')
     val qmark = rest.indexOf('?')
@@ -42,7 +43,7 @@ object Canonical extends Serializable {
       else if (slash < 0) qmark
       else if (qmark < 0) slash
       else math.min(slash, qmark)
-    var authority = rest.substring(0, authEnd).toLowerCase
+    var authority = rest.substring(0, authEnd).toLowerCase(Locale.ROOT)
     // strip default ports
     if ((scheme == "http" && authority.endsWith(":80")) ||
         (scheme == "https" && authority.endsWith(":443")))
@@ -73,7 +74,7 @@ object Canonical extends Serializable {
     val colon = auth.lastIndexOf(':')
     val hostPart = if (colon >= 0 && auth.drop(colon + 1).forall(_.isDigit))
       auth.substring(0, colon) else auth
-    hostPart.toLowerCase
+    hostPart.toLowerCase(Locale.ROOT)
   }
 
   /** Resolve a possibly-relative href against a base URL (subset of

@@ -1,5 +1,6 @@
 package graft.url
 
+import java.util.Locale
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.model.RobotsRule
 
@@ -56,12 +57,12 @@ object Robots {
       }
       val colon = line.indexOf(':')
       if (colon > 0) {
-        val key = line.substring(0, colon).trim.toLowerCase
+        val key = line.substring(0, colon).trim.toLowerCase(Locale.ROOT)
         val value = line.substring(colon + 1).trim
         key match {
           case "user-agent" =>
             if (inRules) flush()
-            agents :+= value.toLowerCase
+            agents :+= value.toLowerCase(Locale.ROOT)
           case "disallow" =>
             inRules = true
             if (value.nonEmpty) disallow :+= value
@@ -86,7 +87,7 @@ object Robots {
     * matches only `*` groups). Prefixes keep document order, de-duped. */
   def parse(host: String, body: String, agent: String = "*"): RobotsRule = {
     val groups = splitGroups(if (body == null) "" else body)
-    val tok = agent.toLowerCase
+    val tok = agent.toLowerCase(Locale.ROOT)
     val named =
       if (tok == "*") Seq.empty
       else groups.filter(_.agents.contains(tok))

@@ -6,8 +6,8 @@ import graft.crawl.{Crawler, Snapshot}
 
 /** CI guard on Spark's generated-class cache (`SparkTune.conf`): warm
   * query passes and a steady crawl round run classes this JVM has
-  * already compiled, bar a few AQE renumberings (below). With the cache
-  * at Spark's default (100 entries) both recompiled most classes. */
+  * already compiled, bar a rare plan variant (below). With the cache at
+  * Spark's default (100 entries) both recompiled most classes. */
 class CodegenCacheSpec extends SparkSpec {
 
   /** Janino compiles `body` runs. The session comes first: Spark sizes
@@ -25,15 +25,13 @@ class CodegenCacheSpec extends SparkSpec {
     "q_join_left", "q_area_coverage")
 
   /** Janino compiles two warm passes of the queries may run together
-    * (the former cache size: 227 + 227). Not 0: AQE numbers a query's
-    * codegen stages in the order it creates them, which follows the
-    * order concurrent shuffle stages finish, and the number is part of
-    * the generated class's name. In q_dedup_clusters and
-    * q_theme_grouped that order can change between passes, and each
-    * new numbering compiles its stages once per class loader. Measured
-    * at local[4]: 4 + 0 alone, 7 + 4 in the tier-1 JVM, and 13 over 12
-    * warm passes on a loaded host (11 in one pass); 0 + 0 at local[1]. */
-  private val WarmCompiles = 24
+    * (the former cache size: 227 + 227; 24 while AQE's stage numbers
+    * were part of the class names, before `SparkTune.conf` set
+    * `spark.sql.codegen.useIdInClassName=false`). Not 0: q_theme_grouped
+    * sometimes runs a plan variant the cold pass did not, and compiles
+    * its 5 classes once. Measured at local[4] over 56 warm passes in 4
+    * JVMs: 5 in one pass per JVM at most, 0 in every other. */
+  private val WarmCompiles = 5
 
   /** Janino compiles a steady crawl round below may run: measured 2 at
     * local[4] and local[1] (the former cache size: 109). */

@@ -84,4 +84,50 @@ class FrontierSpec extends SparkSpec {
     assert(out.find(_.url.contains("courses")).get.priority === 1)
     assert(out.find(_.url.contains("news")).get.priority === 0)
   }
+
+  test("keyword predicates equal Spark's lower(url).contains(k) on urls " +
+      "with ASCII, Latin-1, Greek and Turkish letters") {
+    import java.util.Locale
+    import org.scalacheck.{Gen, Prop, Test}
+    import spark.implicits._
+    // the crawl's keyword lists, and keywords whose letters lowercase
+    // into or out of ASCII. Not σ or ς: Java and ICU place the final
+    // sigma differently in some contexts ("AΣ-b" lowers to "aς-b" in
+    // Java, "aσ-b" in Spark), which no keyword without them can see.
+    val lists = Seq(Synth.priorityKeywords, Synth.excludeKeywords,
+      Seq("i", "k", "i\u0307", "ı", "ß", "ss", "é"))
+    val keywords = lists.flatten
+    // keywords in any case (Turkish upper case: İ for i), and runs of
+    // letters whose lowercase depends on context (final sigma), locale
+    // (I, İ) or is not one char (İ → i + U+0307; the Kelvin sign → k)
+    val letter = Gen.oneOf(('a' to 'z') ++ ('A' to 'Z') ++ "0123456789/.:-?=_" ++
+      "ÀÉÍÖÜßàéíöüÿ" ++ "ΣσςΑΩαω" ++ "İıIi\u212A")
+    val word = Gen.oneOf(
+      Gen.oneOf(keywords).flatMap(k => Gen.oneOf(k, k.toUpperCase(Locale.ROOT),
+        k.toUpperCase(Locale.forLanguageTag("tr")), k.capitalize)),
+      Gen.stringOf(letter))
+    val url = Gen.listOf(word).map(ws => "https://" + ws.mkString)
+    val prop = Prop.forAll(Gen.listOfN(64, url)) { urls =>
+      val low = lower(col("url"))
+      val perKeyword = keywords.map(k => low.contains(k))
+      val perList = lists.map(ks => ks.map(k => low.contains(k)).reduce(_ || _))
+      val rows = urls.toDF("url").select(col("url") +: (perKeyword ++
+          perList ++ Seq(Frontier.priorityCol(col("url"), lists(0)),
+            Frontier.excludedCol(col("url"), lists(1)))): _*)
+        .collect()
+      rows.forall { r =>
+        val u = r.getString(0)
+        val n = keywords.size
+        keywords.indices.forall(i =>
+          r.getBoolean(1 + i) == Frontier.containsAny(Seq(keywords(i)))(u)) &&
+        lists.indices.forall(i =>
+          r.getBoolean(1 + n + i) == Frontier.containsAny(lists(i))(u)) &&
+        r.getInt(1 + n + lists.size) == (if (r.getBoolean(1 + n)) 1 else 0) &&
+        r.getBoolean(2 + n + lists.size) == r.getBoolean(2 + n)
+      }
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(res.passed, res)
+  }
 }
