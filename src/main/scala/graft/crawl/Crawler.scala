@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.extract.EscoMatcher
 import graft.frontier.Frontier
 import graft.model._
+import graft.seen.Seen
 import graft.util.Overlap
 
 /** The driver-side round loop: iterative BFS with a persistent queue —
@@ -34,19 +35,14 @@ object Crawler {
       frontier: Dataset[FrontierEntry],
       seenHashes: DataFrame, // url_hash: Long
       totalFetched: Long,
-      // Bloom-prefilter runs only: the seen-set shards (in snapshot
-      // mode, the committed `shards` table), maintained INCREMENTALLY
-      // (prev shards OR'd with the round slice's shards —
-      // O(slice) hashing + a ≤2×numShards-row merge per round). The
-      // former rebuild-from-scratch inside each round hashed the ENTIRE
-      // seen set every round: O(total) per round, O(rounds × total)
-      // per crawl — exactly the term that kept the Bloom path slower
-      // than the exact anti-join at every corpus size yet timed.
+      // seen-filter runs only: the seen set's shards (in snapshot mode,
+      // the committed `shards` table), grown by each round's fetches —
+      // O(slice) hashing + a ≤2×numShards-row merge per round
       seenShards: Option[Dataset[graft.model.SeenShard]] = None)
 
   /** Round-0 state: the seeds as a robots-gated frontier (every
-    * frontier row is fetchable; see Round.run step 2) and an empty seen
-    * set. */
+    * frontier row is fetchable; see Round.run step 1), one row per
+    * `url_hash`, and an empty seen set. */
   def initialState(seeds: Dataset[Seed], pages: DataFrame,
       robots: Dataset[RobotsRule])
       (implicit spark: SparkSession): CrawlState = {
@@ -57,15 +53,14 @@ object Crawler {
       .withColumn("warc_ts",
         coalesce(col("warc_ts"), lit(new java.sql.Timestamp(0L))))
       .withColumn("depth", lit(0))
-    val frontier = Frontier.robotsGate(Frontier.fromUrls(seeded,
-      graft.corpus.Synth.priorityKeywords,
-      graft.corpus.Synth.excludeKeywords), robots)
+    val frontier = Frontier.merge(Frontier.robotsGate(Frontier.fromUrls(
+      seeded, graft.corpus.Synth.priorityKeywords,
+      graft.corpus.Synth.excludeKeywords), robots))
     // a local relation, so that planning knows it is empty: round 0's
-    // candidate anti-join against (seen ∪ the round's fetches) is then
-    // planned as a broadcast join. Over an RDD of unknown size it was a
-    // sort-merge join that AQE turned into a broadcast join only when
-    // the fetched side's stage finished first, and the candidate side's
-    // shuffle stage ran or not (one job more or less) by stage timing.
+    // exact seen test, an anti-join with it, then drops out of the plan.
+    // Over an RDD of unknown size it was a sort-merge join that AQE
+    // turned into a broadcast join only when the other side's stage
+    // finished first, one job more or less by stage timing.
     val empty = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType(Seq(
@@ -106,10 +101,12 @@ object Crawler {
         graft.seen.BloomShard.testParams,
       // very-large-budget fetch shape: the caller has partitioned+cached
       // the corpus on `url`; rounds drop the broadcast hint so only the
-      // selected side shuffles (see Round.run step 3)
+      // selected side shuffles (see Round.run step 2)
       bucketedFetch: Boolean = false,
       // continue from an explicit state (Recrawl's expiry path) instead
-      // of seeding/snapshot-resuming; seeds are ignored when set
+      // of seeding/snapshot-resuming; seeds are ignored when set. Its
+      // frontier must be distinct on url_hash and disjoint from its seen
+      // set (see Round)
       startState: Option[CrawlState] = None,
       // seen-filter backend for the prefilter legs: false = Bloom shards
       // (incremental bitwise-OR growth), true = cuckoo shards
@@ -202,11 +199,11 @@ object Crawler {
           else graft.seen.BloomShard.grow(
             spark.emptyDataset[SeenShard], state.seenHashes, bloomParams))
             .localCheckpoint(true)))
-      val probeParams =
-        if (cuckooSeen) cuckooParams.probeParams else bloomParams
+      val filter = state.seenShards.map(Seen.Filter(_,
+        if (cuckooSeen) cuckooParams.probeParams else bloomParams,
+        bloomCopartition))
       val out = Round.run(pages, robots, state.frontier, state.seenHashes,
-        dict, state.round, roundMs, bloomPrefilter, bloomCopartition,
-        state.seenShards, probeParams, bucketedFetch)
+        dict, state.round, roundMs, filter, bucketedFetch)
       if (out.fetchedCount == 0L) {
         out.release(); out.releaseResults()
         continue = false
@@ -222,18 +219,14 @@ object Crawler {
         // way, and the caches hold the same bytes the checkpoint would.
         val slice = out.results
         // this round's fetches are disjoint from seen by construction
-        // (the round anti-joins before fetching) → plain union, no
-        // distinct shuffle needed. The union is re-checkpointed FLAT
-        // every round: a lazy-union cadence (compact every 4) was
-        // A/B-tested in round 3 and REGRESSED — between compactions the
-        // two per-round anti-joins re-scan every slice's 32 checkpoint
-        // partitions (~320 extra task launches per round), costing more
-        // wall time than the one small rewrite job the laziness saves
-        // (same conclusion as the round-2 mmap-churn diagnosis, with
-        // job-count data). The seen set is url_hash only (8 B/url); at
-        // 10^10-frontier scale the co-partitioned Bloom shards carry the
-        // prefilter and this exact set lives in an Iceberg table updated
-        // by appending the round's slice instead.
+        // (the frontier holds unseen urls only, see Round) → plain union,
+        // no distinct shuffle needed. The union is re-checkpointed FLAT
+        // every round: a lazy union compacted every 4 rounds was measured
+        // slower — between compactions the seen anti-joins re-scanned
+        // every slice's checkpoint partitions, costing more than the one
+        // small rewrite job it saved. The seen set is url_hash only
+        // (8 B/url); at 10^10-frontier scale the Bloom shards carry the
+        // test and this exact set is an Iceberg table appended to.
         //
         // Snapshot mode writes this union straight to the snapshot and
         // the next state re-reads it from parquet, so it is materialized

@@ -8,7 +8,7 @@ import graft.corpus.Synth
 import graft.extract.{EscoMatcher, TextExtract}
 import graft.frontier.Frontier
 import graft.model._
-import graft.seen.BloomShard
+import graft.seen.Seen
 import graft.url.Canonical
 
 /** One crawl round as a single typed Dataset pipeline (north rule: "each
@@ -18,11 +18,17 @@ import graft.url.Canonical
   * 103-170 — fetch, gate, pipeline, link scrape, dedup, enqueue) but
   * set-at-a-time:
   *
-  *   frontier ──anti-join──> unseen ──window(host budget)──> selected
+  *   frontier ──window(host budget)──> selected
   *     ──join pages──> fetched ──TextExtract+EscoMatcher──> results
   *   fetched.html ──links──explode──canonicalize──same-host
   *     ──exclude/robots──> candidates
-  *     ──anti-join(seen ∪ selected)──> new frontier entries
+  *     ──anti-join(fetched, broadcast)──anti-join(seen)──> new entries
+  *
+  * That anti-join with `seen` (`Seen.unseen`) is the round's only seen
+  * test. Precondition: the frontier is distinct on `url_hash` and
+  * disjoint from `seenHashes`. Seeds, candidates, deferred and missed
+  * rows and Recrawl's requeue all keep it (CrawlerSpec checks it after
+  * every round, for every seen backend).
   *
   * Every frontier row is fetchable: robots and exclude keywords are
   * gated where rows are created (seeds, candidates, Recrawl's requeue),
@@ -30,51 +36,54 @@ import graft.url.Canonical
   * frontier of only disallowed links never exists to cost a round.
   *
   * Job census of a snapshot-mode round with the co-partitioned Bloom
-  * seen set — 23 Spark jobs on the CrawlerSpec fixture in round 0, in a
-  * steady round and in a resumed call's first round alike; its CI guard
-  * pins that bound (30 before the zero-job snapshot reads, one-pass seen
-  * commit and exchange-free lineage; round 0 and a resumed round ran 25,
-  * building shards from the seen set). Under AQE each query stage is one
-  * job:
+  * seen set — 21 Spark jobs on the CrawlerSpec fixture in a steady round
+  * and in a resumed call's first round, 22 in round 0 (4 cores; the
+  * exact seen set: 16 and 19); its CI guard pins that bound (23 while
+  * the frontier was tested too). Under AQE each query stage is one job:
   *
-  *  - the round action, `lineageOf(results).collect` (11): the Bloom
-  *    cogroup's frontier and shard exchanges and the flagged-frontier
-  *    cache; the verify anti-join's seen broadcast, the budgets
+  *  - the round action, `lineageOf(results).collect` (6): the budgets
   *    broadcast, the host-window exchange and the ranked-frontier cache;
   *    the selected-set broadcast and the enriched cache (the corpus is
   *    never shuffled); the collect itself — the lineage counters are a
   *    narrow pass over the enriched cache;
-  *  - the round's tail, started as soon as the action returns and run
+  *  - the seen filter's checkpoint of the flagged candidates (4), before
+  *    Round.run returns: the robots broadcast, the fetched-set broadcast
+  *    and the cogroup's candidate and shard exchanges;
+  *  - the round's tail, started as soon as Round.run returns and run
   *    concurrently (Crawler): the seen and results-slice writes (2) and
   *    shard growth, `BloomShard.grow`'s two cogroup exchanges and the
   *    `shards` write (3);
-  *  - alongside it, the next frontier (5): the candidate anti-join and
-  *    merge stages behind the frontier checkpoint (4) and the enqueue
-  *    count over the checkpoint (1); then the frontier and lineage-slice
-  *    writes (2). The manifest commits once every write finished; the
-  *    read-back is free (the manifest carries the schemas), and the next
-  *    round or a resume reads the committed shards back.
+  *  - alongside it, the next frontier (4): the missed urls' fetched-set
+  *    broadcast, the verify join's seen broadcast and the merge exchange
+  *    behind the frontier checkpoint, and the enqueue count over the
+  *    checkpoint; then the frontier and lineage-slice writes (2). The
+  *    manifest commits once every write finished; the read-back is free
+  *    (the manifest carries the schemas), and the next round or a resume
+  *    reads the committed shards back.
   *
   * Dimension tables (robots, budgets, ESCO dict) and the budget-bounded
-  * selected set are broadcast.
+  * selected and fetched sets are broadcast.
   */
 object Round {
 
   final case class Output(
       results: Dataset[CrawlResult],
       nextFrontier: Dataset[FrontierEntry],
-      newSeenHashes: DataFrame, // url_hash: Long of this round's fetches
       lineage: Dataset[Lineage],
       fetchedCount: Long,
-      caches: Seq[DataFrame],   // per-round scratch (ranked frontier)
+      rankedCache: DataFrame,   // per-round scratch: the ranked frontier
+      flagged: Option[DataFrame], // and the seen filter's checkpoint
       resultCache: DataFrame) { // the round's enriched cache (html-free);
                                 // lifecycle is the CALLER's: snapshot mode
                                 // releases it once the slice is on parquet,
                                 // in-memory mode retains it as the slice
                                 // itself (no extra checkpoint copy)
-    /** Release this round's scratch caches. Call once everything derived
-      * from them (nextFrontier) is materialized. */
-    def release(): Unit = caches.foreach(_.unpersist())
+    /** Release this round's scratch. Call once everything derived from
+      * it (nextFrontier) is materialized. */
+    def release(): Unit = {
+      rankedCache.unpersist()
+      flagged.foreach(graft.util.Checkpoints.release)
+    }
     def releaseResults(): Unit = resultCache.unpersist()
   }
 
@@ -86,72 +95,20 @@ object Round {
       dict: Broadcast[EscoMatcher.Dict],
       roundNo: Int,
       roundMs: Long = 4000L,
-      bloomPrefilter: Boolean = false,
-      bloomCopartition: Boolean = false,
-      prebuiltShards: Option[Dataset[SeenShard]] = None,
-      bloomParams: BloomShard.Params = BloomShard.testParams,
+      seenFilter: Option[Seen.Filter] = None,
       bucketedFetch: Boolean = false)
       (implicit spark: SparkSession): Output = {
     import spark.implicits._
     val tRoundStart = System.nanoTime()
 
-    // 1. dedup against the seen set. Bloom path = flag-and-verify (the
-    //    classic Bloom join): the filter FLAGS each frontier row
-    //    (broadcast layout = map-side, no frontier shuffle;
-    //    co-partitioned layout = one frontier shuffle, no driver
-    //    collect — the 10^10-scale path); definitely-unseen rows skip
-    //    the exact seen set entirely, and only the maybe-seen rows (true
-    //    repeats + the filter's false positives) are verified by the
-    //    exact anti-join. Output is EXACTLY the plain anti-join's at any
-    //    false-positive rate — the former filter-only layout silently
-    //    dropped false positives (a lost page plus its whole undiscovered
-    //    link subtree; 8% of the 208k corpus at test-sized shards) — while
-    //    the anti-join's left side shrinks from the full frontier to the
-    //    maybe-seen sliver, which at north-rule scale is the difference
-    //    between shuffling 10^8 frontier rows against a 10^10-row seen
-    //    table every round and shuffling only the repeats. The crawl loop
-    //    maintains the shards incrementally across rounds and passes them
-    //    in; the from-scratch build here is the single-round fallback
-    //    (specs, ad-hoc calls).
-    val bloomScratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val unseen0 =
-      if (bloomPrefilter) {
-        val shards = prebuiltShards.getOrElse(
-          BloomShard.build(seenHashes, bloomParams))
-        val flagged =
-          if (bloomCopartition) {
-            // the cogroup layout pays a frontier shuffle + per-row probe;
-            // BOTH branches below consume it, so cache this round's
-            // flagged frontier (released with the round's scratch caches)
-            // instead of running the cogroup twice. The broadcast
-            // layout's flag is a map-side probe — recomputing it is
-            // cheaper than a cache round-trip, so it stays uncached.
-            val c = BloomShard.flagMaybeSeenCopartitioned(
-              frontier.toDF(), shards, bloomParams).cache()
-            bloomScratch += c
-            c
-          } else BloomShard.flagMaybeSeen(
-            frontier.toDF(), shards, bloomParams)
-        val defUnseen = flagged
-          .filter(!col(BloomShard.MaybeCol)).drop(BloomShard.MaybeCol)
-        val maybeSeen = flagged
-          .filter(col(BloomShard.MaybeCol)).drop(BloomShard.MaybeCol)
-        defUnseen.unionByName(
-          maybeSeen.join(seenHashes, Seq("url_hash"), "left_anti")
-            .select(defUnseen.columns.map(col): _*))
-      } else frontier.toDF().join(seenHashes, Seq("url_hash"), "left_anti")
-    val unseen = unseen0
-      .select(Frontier.Cols.map(col): _*)
-      .as[FrontierEntry]
-
-    // 2. politeness budget selection. Robots are gated where frontier
+    // 1. politeness budget selection. Robots are gated where frontier
     //    rows are created (seeds, the candidates below, Recrawl's
     //    requeue), so every frontier row is fetchable and the round joins
     //    the rules once, for the budgets.
     val (selected, deferred, rankedCache) =
-      Frontier.selectRound(unseen, robots, roundMs)
+      Frontier.selectRound(frontier, robots, roundMs)
 
-    // 3. "fetch" = join the corpus (the synthesized pages table IS the
+    // 2. "fetch" = join the corpus (the synthesized pages table IS the
     //    web; SURVEY.md S1). Misses (dangling links) retry up to the cap.
     //
     //    Join shape: the selected set is politeness-BUDGET-BOUNDED
@@ -168,7 +125,7 @@ object Round {
     //    corpus is still never shuffled.
     val sel = selected.toDF().alias("f")
 
-    // 4. extract text + links + skills + signatures in ONE pipeline over
+    // 3. extract text + links + skills + signatures in ONE pipeline over
     //    the fetch join, cached WITHOUT the html column. Text comes from
     //    the deterministic extraction UDF over html; byte-identity vs the
     //    corpus text column is the input_hint invariant (tested;
@@ -234,10 +191,10 @@ object Round {
       f"[round $roundNo%3d] fetch+extract action: " +
       f"${(System.nanoTime() - tRoundStart) / 1e9}%7.2f s")
 
-    // 5. link scrape → new frontier candidates (same-host only,
-    //    apify.js:156-163), depth+1, dedup'd against seen ∪ this round.
-    //    Links come from the cached single-parse column — the html is
-    //    not touched again.
+    // 4. link scrape → new frontier candidates (same-host only,
+    //    apify.js:156-163), depth+1, minus this round's fetches and the
+    //    seen set: the round's only seen test. Links come from the cached
+    //    single-parse column — the html is not touched again.
     val rawLinks = enriched
       .select(col("url").as("src_url"), col("host").as("src_host"),
         col("warc_ts"), col("depth"),
@@ -247,23 +204,21 @@ object Round {
       .filter(col("url").startsWith("http"))
       .filter(Canonical.urlHost(col("url")) === col("src_host"))
       .select(col("url"), col("warc_ts"), (col("depth") + 1).as("depth"))
-    // one fused anti-join against (seen ∪ this round's fetches) — two
-    // separate anti-joins would shuffle the candidate set twice; the
-    // union side is hash-partitioned once instead
-    val candidates = Frontier.robotsGate(Frontier.fromUrls(rawLinks,
-        Synth.priorityKeywords, Synth.excludeKeywords), robots)
-      .toDF()
-      .join(seenHashes.unionByName(results.select("url_hash").toDF()),
-        Seq("url_hash"), "left_anti")
-      .select(Frontier.Cols.map(col): _*)
-      .as[FrontierEntry]
+    // the fetches are budget-bounded, so that anti-join broadcasts them
+    // and shuffles no candidate; the seen test then sees fewer rows
+    val (unseen, flagged) = Seen.unseen(
+      Frontier.robotsGate(Frontier.fromUrls(rawLinks,
+          Synth.priorityKeywords, Synth.excludeKeywords), robots).toDF()
+        .join(broadcast(enriched.select(col("url_hash"))), Seq("url_hash"),
+          "left_anti"),
+      seenHashes, seenFilter)
+    val candidates =
+      unseen.select(Frontier.Cols.map(col): _*).as[FrontierEntry]
 
-    val nextFrontier = Frontier.merge(
-      deferred.toDF().unionByName(missed.toDF()).as[FrontierEntry],
-      candidates)
+    val nextFrontier = Frontier.merge(deferred, missed, candidates)
 
-    Output(results, nextFrontier, results.select("url_hash").toDF(),
-      lineage, fetchedCount, rankedCache +: bloomScratch.toSeq, enriched)
+    Output(results, nextFrontier, lineage, fetchedCount, rankedCache,
+      flagged, enriched)
   }
 
   /** Per-partition lineage counters of a round's results, one row per

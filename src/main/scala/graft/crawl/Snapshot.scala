@@ -62,18 +62,6 @@ final class Snapshot(base: String)(implicit spark: SparkSession) {
   private def manifestPath(round: Int): Path =
     Paths.get(s"$base/manifest_$round.json")
 
-  /** Commit one round: `tables` are replaced (full state written under
-    * this round), `appends` are append-only (only the round's slice is
-    * written; the manifest accumulates the slice paths). */
-  def write(round: Int, tables: Map[String, DataFrame],
-      counters: Map[String, Long],
-      appends: Map[String, DataFrame] = Map.empty): Unit = {
-    val c = begin(round)
-    tables.foreach { case (n, df) => c.replace(n, df) }
-    appends.foreach { case (n, df) => c.append(n, df) }
-    c.commit(counters)
-  }
-
   /** Open a round's commit. Every table added to it starts writing at
     * once, on its own thread (the tables are independent, so the fixed
     * per-write costs overlap); `commit` waits for every write before it

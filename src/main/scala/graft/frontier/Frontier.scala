@@ -144,20 +144,20 @@ object Frontier {
     (selected, deferred, ranked)
   }
 
-  /** Merge new candidates into the frontier: union + dedup on url_hash
-    * with deterministic preference (lowest depth, then url, then the
-    * remaining fields lexicographically — fully deterministic even when
-    * one url is discovered twice in a round).
+  /** Merge frontier row sets into one frontier: union + dedup on
+    * url_hash with deterministic preference (lowest depth, then url, then
+    * the remaining fields lexicographically — fully deterministic even
+    * when one url is discovered twice in a round, or seeded twice).
     *
     * Implemented as `groupBy(url_hash).agg(min(struct(...)))` rather than
     * a row_number window: a hash aggregate gets map-side partial
     * aggregation (each map task pre-dedups before the shuffle), while a
     * sort-window must shuffle every row — at 10^10 frontier rows that is
     * a materially smaller exchange. */
-  def merge(a: Dataset[FrontierEntry], b: Dataset[FrontierEntry])
+  def merge(frontiers: Dataset[FrontierEntry]*)
       (implicit spark: SparkSession): Dataset[FrontierEntry] = {
     import spark.implicits._
-    a.toDF().unionByName(b.toDF())
+    frontiers.map(_.toDF()).reduce(_ unionByName _)
       .groupBy(col("url_hash"))
       .agg(min(struct(col("depth"), col("url"), col("warc_ts"),
         col("priority"), col("retry_count"), col("host"))).as("w"))

@@ -189,8 +189,8 @@ object BloomShard {
     * positive must be re-checked against the exact seen set, not dropped
     * (dropping loses the page AND its whole undiscovered link subtree —
     * measured 8% of the 208k scaling corpus under the old filter-only
-    * layout at test-sized shards). Callers route MaybeCol=false straight
-    * through and anti-join only the MaybeCol=true rows. */
+    * layout at test-sized shards). [[Seen.unseen]] routes MaybeCol=false
+    * straight through and anti-joins only the MaybeCol=true rows. */
   def flagMaybeSeen(frontier: DataFrame, shards: Dataset[SeenShard],
       p: Params = testParams)(implicit spark: SparkSession): DataFrame = {
     val shardMap: Map[Int, Long => Boolean] =
@@ -241,21 +241,4 @@ object BloomShard {
     }(rowEnc)
     flagged.toDF().drop("__sid")
   }
-
-  /** Filter-only convenience over [[flagMaybeSeen]] (keeps rows the
-    * filter calls definitely-unseen). NOT output-equal to an exact seen
-    * check — false positives are dropped; crawl paths must use the flag +
-    * exact-verify shape instead (Round.run). */
-  def filterUnseen(frontier: DataFrame, shards: Dataset[SeenShard],
-      p: Params = testParams)(implicit spark: SparkSession): DataFrame =
-    flagMaybeSeen(frontier, shards, p)
-      .filter(!col(MaybeCol)).drop(MaybeCol)
-
-  /** Filter-only convenience over [[flagMaybeSeenCopartitioned]]; same
-    * lossy caveat as [[filterUnseen]]. */
-  def filterUnseenCopartitioned(frontier: DataFrame,
-      shards: Dataset[SeenShard], p: Params = testParams)
-      (implicit spark: SparkSession): DataFrame =
-    flagMaybeSeenCopartitioned(frontier, shards, p)
-      .filter(!col(MaybeCol)).drop(MaybeCol)
 }

@@ -171,20 +171,24 @@ class PlanSpec extends SparkSpec {
       "side is only the maybe-seen sliver, and bounded-table hints survive") {
     // A seen set too big to broadcast is emulated here by disabling
     // AUTOMATIC broadcast conversion (threshold -1, AQE off, below).
-    // BASELINE.md's break-even legs rest on three plan claims — pin them:
-    // (1) the exact leg's frontier × seen anti-join is a shuffle join
+    // BASELINE.md's break-even legs rest on these plan claims — pin them
+    // on the round's one seen test, the link candidates' anti-join:
+    // (1) the exact leg's candidates × seen anti-join is a shuffle join
     //     (the full-shuffle-per-round cost the model charges it);
     // (2) the Bloom leg's exact-verify anti-join reads only the
-    //     maybe-seen sliver of the flagged frontier, never the full one;
+    //     maybe-seen sliver of the flagged candidates, never all of them;
     // (3) explicit broadcast() hints on tables bounded by construction
-    //     (robots rules, the budget-bounded selected fetch set) survive a
-    //     -1 threshold, as they would at 10^10 scale.
+    //     (robots rules, the budget-bounded selected and fetched sets)
+    //     survive a -1 threshold, as they would at 10^10 scale;
+    // (4) the round action's plan (the ranked-frontier cache) holds no
+    //     seen test at all.
     import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
     import graft.crawl.Round
     import graft.extract.EscoMatcher
-    import graft.seen.BloomShard
+    import graft.seen.{BloomShard, Seen}
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // static plans: the assertions must see the no-broadcast shape itself,
@@ -195,64 +199,90 @@ class PlanSpec extends SparkSpec {
     try {
       pages.count()
       val robots = Synth.robots(spark, 8)
-      val frontier = Frontier.fromUrls(
+      val all = Frontier.fromUrls(
         pages.select(col("url"), col("warc_ts"), lit(0).as("depth")),
         Synth.priorityKeywords, Synth.excludeKeywords)
-      // a nonempty seen set (half the frontier) so both the exact
-      // anti-join and the Bloom verify join have real work
-      val seen = frontier.toDF().select(col("url_hash"))
-        .filter(pmod(col("url_hash"), lit(2)) === 0)
+      // half the pages are the frontier (all fetched at this budget), the
+      // other half were fetched before: the links the fetched pages hold
+      // to them are candidates the seen test must drop
+      val frontier = all.filter(pmod(col("url_hash"), lit(2)) === 0)
+      val seen = all.toDF().select(col("url_hash"))
+        .filter(pmod(col("url_hash"), lit(2)) === 1)
         .localCheckpoint(true)
+      val seenRdd = seen.queryExecution.executedPlan.collectFirst {
+        case s: RDDScanExec => s.rdd
+      }.get
+      def readsSeen(p: SparkPlan) =
+        p.exists { case s: RDDScanExec => s.rdd eq seenRdd; case _ => false }
       val dict = EscoMatcher.broadcastDict(spark,
         Synth.escoLabels().map(l => (l.concept_uri, l.preferred_label)))
-      // the round's seen-set joins live upstream of the ranked-frontier
-      // cache (out.caches.head); assert on its cached physical plan
-      def rankedPlan(out: Round.Output) =
-        out.caches.head.queryExecution.optimizedPlan.collect {
+      def cachedPlan(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.optimizedPlan.collect {
           case r: InMemoryRelation => r.cachedPlan
         }.head
-      def antiLefts(p: org.apache.spark.sql.execution.SparkPlan) =
+      // (left, right) of each shuffled and each broadcast anti-join
+      def antis(p: SparkPlan) = (
         p.collect {
-          case j: SortMergeJoinExec if j.joinType == LeftAnti => j.left
-          case j: ShuffledHashJoinExec if j.joinType == LeftAnti => j.left
-        }
+          case j: SortMergeJoinExec if j.joinType == LeftAnti => (j.left, j.right)
+          case j: ShuffledHashJoinExec if j.joinType == LeftAnti => (j.left, j.right)
+        },
+        p.collect {
+          case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+        })
+      // (4) selection and fetch never touch the seen set or a filter flag
+      def noSeenTest(out: Round.Output) = {
+        val ranked = cachedPlan(out.rankedCache)
+        assert(antis(ranked)._1.isEmpty && antis(ranked)._2.isEmpty &&
+          !readsSeen(ranked) && !ranked.toString.contains(BloomShard.MaybeCol),
+          s"the ranked frontier holds a seen test:\n$ranked")
+      }
 
       val exact = Round.run(pages, robots, frontier, seen, dict, 0,
         roundMs = 200000L)
-      val exactRanked = rankedPlan(exact)
-      // (1) the anti-join shuffles — no automatic broadcast of the seen set
-      assert(antiLefts(exactRanked).nonEmpty,
-        s"exact anti-join is not a shuffle join:\n$exactRanked")
-      assert(!exactRanked.toString.contains("BroadcastHashJoin LeftAnti"),
-        exactRanked.toString)
-      // (3) the robots-gate hint survives in the same plan
+      val exactNext = exact.nextFrontier.queryExecution.executedPlan
+      val (exactShuffled, exactBroadcast) = antis(exactNext)
+      // (1) the seen anti-join shuffles — no automatic broadcast of seen
+      assert(exactShuffled.size == 1 && readsSeen(exactShuffled.head._2),
+        s"the seen anti-join is not one shuffle join:\n$exactNext")
+      // (3) the fetched set and the missed urls' fetched side broadcast
+      assert(exactBroadcast.size == 2 &&
+        exactBroadcast.forall(j => !readsSeen(j)), exactNext.toString)
+      noSeenTest(exact)
+      // (3) the robots-gate hint survives in the round action's plan
+      val exactRanked = cachedPlan(exact.rankedCache)
       assert(exactRanked.toString.contains("BroadcastHashJoin"),
         s"robots broadcast hint did not survive -1 threshold:\n$exactRanked")
       // (3) the fetch join keeps its budget-bounded broadcast hint
-      val exactFetch = exact.resultCache.queryExecution.optimizedPlan.collect {
-        case r: InMemoryRelation => r.cachedPlan
-      }.head
+      val exactFetch = cachedPlan(exact.resultCache)
       assert(exactFetch.toString.contains("BroadcastHashJoin"),
         s"fetch-join broadcast hint did not survive:\n$exactFetch")
 
       val shards = BloomShard.build(seen, BloomShard.testParams)
         .localCheckpoint(true)
       val bloom = Round.run(pages, robots, frontier, seen, dict, 0,
-        roundMs = 200000L, bloomPrefilter = true, bloomCopartition = true,
-        prebuiltShards = Some(shards))
-      val bloomRanked = rankedPlan(bloom)
-      // (2) the single anti-join's LEFT side is the maybe-seen filter of
-      // the flagged-frontier cache, not the full frontier
-      val lefts = antiLefts(bloomRanked)
-      assert(lefts.size == 1, s"expected one verify anti-join:\n$bloomRanked")
-      assert(lefts.head.toString.contains(BloomShard.MaybeCol),
+        roundMs = 200000L, seenFilter = Some(
+          Seen.Filter(shards, BloomShard.testParams, copartitioned = true)))
+      val bloomNext = bloom.nextFrontier.queryExecution.executedPlan
+      // (2) the single verify anti-join's LEFT side is the maybe-seen
+      // filter of the flagged candidates, not all of them
+      val (bloomShuffled, _) = antis(bloomNext)
+      assert(bloomShuffled.size == 1 && readsSeen(bloomShuffled.head._2),
+        s"expected one verify anti-join:\n$bloomNext")
+      assert(bloomShuffled.head._1.toString.contains(BloomShard.MaybeCol),
         s"verify join's left side is not the maybe-seen sliver:\n" +
-          lefts.head.toString)
-      // and both regimes fetch the identical page set
+          bloomShuffled.head._1.toString)
+      noSeenTest(bloom)
+      // and both regimes fetch the identical page set and enqueue the
+      // identical frontier, which the seen set did shrink
       assert(bloom.fetchedCount === exact.fetchedCount)
+      val next = exact.nextFrontier.toDF()
+      assert(next.exceptAll(bloom.nextFrontier.toDF()).isEmpty &&
+        bloom.nextFrontier.toDF().exceptAll(next).isEmpty)
+      val unfiltered = Round.run(pages, robots, frontier,
+        seen.limit(0), dict, 0, roundMs = 200000L)
+      assert(next.count() < unfiltered.nextFrontier.count())
 
-      exact.release(); exact.releaseResults()
-      bloom.release(); bloom.releaseResults()
+      Seq(exact, bloom, unfiltered).foreach { o => o.release(); o.releaseResults() }
       graft.util.Checkpoints.release(seen)
       graft.util.Checkpoints.release(shards)
     } finally {

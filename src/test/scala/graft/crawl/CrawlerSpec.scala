@@ -1,7 +1,7 @@
 package graft.crawl
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.corpus.Synth
@@ -23,27 +23,50 @@ class CrawlerSpec extends SparkSpec {
   private lazy val full = Crawler.crawl(pages, robots, seeds, dictLabels,
     maxRounds = 40, roundMs = 4000L)(spark)
 
-  /** Spark jobs a steady round (any round after the first) of the
-    * snapshot + co-partitioned-Bloom crawl below may run, and a resumed
-    * call's first round: 23. Measured on this fixture: 23 at 4 cores and
-    * 22 at 1 core, in round 0, in steady rounds and in a resumed round. */
-  private val JobsPerSteadyRound = 23
+  /** Spark jobs round 0, a steady round (any round after the first) and
+    * a resumed call's first round of the snapshot + co-partitioned-Bloom
+    * crawl below may each run: 22. Measured on this fixture: 22, 21 and
+    * 21 at 4 cores; 20, 19 and 19 at 1 core. */
+  private val JobsPerSteadyRound = 22
 
-  /** A snapshot + co-partitioned-Bloom crawl into `dir` (by default a
-    * fresh directory; a crawl resumes from what is there): its snapshot,
-    * final state and the Spark jobs it ran (the corpus cache is built
-    * first, outside the count). */
+  /** The same bound for the snapshot crawl with the exact seen set: 19.
+    * Measured: 19, 16 and 16 at 4 cores and at 1 core. */
+  private val ExactJobsPerSteadyRound = 19
+
+  /** A snapshot crawl into `dir` (by default a fresh directory; a crawl
+    * resumes from what is there), with the co-partitioned Bloom seen
+    * filter at `params` or, when `params` is None, the exact seen set: its
+    * snapshot, final state and the Spark jobs it ran (the corpus cache is
+    * built first, outside the count). */
   private def durable(maxRounds: Int,
       dir: Path = Files.createTempDirectory("graft-durable"),
-      params: BloomShard.Params = BloomShard.testParams) = {
+      params: Option[BloomShard.Params] = Some(BloomShard.testParams)) = {
     pages.count()
     val snap = new Snapshot(dir.toString)(spark)
     val (state, jobs) = jobsOf(Crawler.crawl(pages, robots, seeds,
       dictLabels, maxRounds = maxRounds, roundMs = 4000L,
-      snapshot = Some(snap), bloomPrefilter = true, bloomCopartition = true,
-      bloomParams = params, retainResults = false)(spark)._1)
+      snapshot = Some(snap), bloomPrefilter = params.isDefined,
+      bloomCopartition = true,
+      bloomParams = params.getOrElse(BloomShard.testParams),
+      retainResults = false)(spark)._1)
     (snap, state, jobs)
   }
+
+  /** Asserts the round precondition (see Round) on a frontier and the
+    * seen set it is crawled against: distinct on `url_hash`, disjoint. */
+  private def assertUnseen(frontier: DataFrame, seen: DataFrame,
+      where: String): Unit = {
+    val hs = frontier.select("url_hash").collect().map(_.getLong(0))
+    assert(hs.distinct.length === hs.length,
+      s"$where: the frontier repeats a url_hash")
+    val seenSet = seen.select("url_hash").collect().map(_.getLong(0)).toSet
+    assert(!hs.exists(seenSet), s"$where: the frontier holds a seen url")
+  }
+
+  /** Asserts the precondition on every round a snapshot committed. */
+  private def assertUnseenPerRound(snap: Snapshot, label: String): Unit =
+    (0 to snap.latest()).foreach(r => assertUnseen(snap.read(r, "frontier"),
+      snap.read(r, "seen"), s"$label, round $r"))
 
   /** Shard id → (kind, bits) of a shard table. */
   private def bits(shards: Dataset[SeenShard]) =
@@ -59,6 +82,7 @@ class CrawlerSpec extends SparkSpec {
   }
 
   private lazy val drained = durable(40)
+  private lazy val exactDrained = durable(40, params = None)
 
   test("crawl drains the frontier and fetches pages") {
     val (state, results, lineage) = full
@@ -275,11 +299,13 @@ class CrawlerSpec extends SparkSpec {
       graft.url.Canonical.hash64(s"https://h$i.edu/")).toDF("url_hash")
     val shards = BloomShard.build(hashes)(spark)
     assert(shards.count() <= BloomShard.testParams.numShards)
-    val out = BloomShard.filterUnseen(hashes, shards)(spark)
-    assert(out.count() === 0) // all inserted → none pass as unseen
+    def unflagged(df: DataFrame) =
+      BloomShard.flagMaybeSeen(df, shards)(spark)
+        .filter(!col(BloomShard.MaybeCol))
+    assert(unflagged(hashes).count() === 0) // all inserted → none unseen
     val fresh = (1L to 500L).map(i =>
       graft.url.Canonical.hash64(s"https://fresh$i.edu/")).toDF("url_hash")
-    val passed = BloomShard.filterUnseen(fresh, shards)(spark).count()
+    val passed = unflagged(fresh).count()
     assert(passed >= 490) // few false positives allowed
   }
 
@@ -341,35 +367,121 @@ class CrawlerSpec extends SparkSpec {
       state = Crawler.CrawlState(r + 1,
         out.nextFrontier.toDF().localCheckpoint(true)
           .as[graft.model.FrontierEntry],
-        state.seenHashes.unionByName(out.newSeenHashes).localCheckpoint(true),
+        state.seenHashes.unionByName(out.results.select("url_hash").toDF())
+          .localCheckpoint(true),
         state.totalFetched + out.fetchedCount)
       out.release(); out.releaseResults()
     }
   }
 
-  test("CI guard: a draining snapshot + co-partitioned-Bloom crawl runs " +
-      "no trailing empty round and stays under the per-round job bound") {
-    val (_, state, jobs) = drained
+  /** A draining snapshot crawl with the seen filter at `params` (None:
+    * exact) runs no trailing empty round, and its round 0, its steady
+    * rounds and a resumed call's first round each run at most `bound`
+    * jobs. */
+  private def jobGuard(params: Option[BloomShard.Params], bound: Int) = {
+    val (_, state, jobs) = if (params.isDefined) drained else exactDrained
     val k = state.round
     assert(k > 2)
-    val (_, capped, cappedJobs) = durable(k)
+    val (_, capped, cappedJobs) = durable(k, params = params)
     assert(capped.totalFetched === state.totalFetched)
     assert(jobs === cappedJobs,
       s"draining crawl ran $jobs jobs, the same crawl capped at $k rounds " +
         s"$cappedJobs: the drain ran a trailing empty round")
     val firstDir = Files.createTempDirectory("graft-durable")
-    val (_, _, firstJobs) = durable(1, firstDir)
+    val (_, _, firstJobs) = durable(1, firstDir, params)
+    assert(firstJobs <= bound, s"round 0 ran $firstJobs jobs, bound $bound")
     val perRound = (cappedJobs - firstJobs).toDouble / (k - 1)
-    assert(perRound <= JobsPerSteadyRound,
-      f"$perRound%.1f jobs per steady round, bound $JobsPerSteadyRound")
-    // a resume reads the committed shards back (no rebuild from seen),
-    // so its first round runs no more jobs than a steady round
-    val (_, resumed, resumedJobs) = durable(2, firstDir)
+    assert(perRound <= bound, f"$perRound%.1f jobs per steady round, bound $bound")
+    // a resume reads the committed state back (the shards too: no rebuild
+    // from seen), so its first round runs no more jobs than a steady round
+    val (_, resumed, resumedJobs) = durable(2, firstDir, params)
     assert(resumed.round === 2)
     info(f"round 0: $firstJobs jobs, steady rounds: $perRound%.1f, " +
       s"resumed round 1: $resumedJobs")
-    assert(resumedJobs <= JobsPerSteadyRound,
-      s"the resumed round ran $resumedJobs jobs, bound $JobsPerSteadyRound")
+    assert(resumedJobs <= bound,
+      s"the resumed round ran $resumedJobs jobs, bound $bound")
+  }
+
+  test("CI guard: a draining snapshot + co-partitioned-Bloom crawl runs " +
+      "no trailing empty round and stays under the per-round job bound") {
+    jobGuard(Some(BloomShard.testParams), JobsPerSteadyRound)
+  }
+
+  test("CI guard: a draining snapshot crawl with the exact seen set runs " +
+      "no trailing empty round and stays under the per-round job bound") {
+    jobGuard(None, ExactJobsPerSteadyRound)
+  }
+
+  test("every committed frontier is distinct on url_hash and disjoint " +
+      "from its seen set: exact, Bloom in both layouts, cuckoo, and a " +
+      "snapshot resume at every round boundary") {
+    assertUnseenPerRound(exactDrained._1, "exact")
+    assertUnseenPerRound(drained._1, "co-partitioned Bloom")
+    def snapshotCrawl(label: String, cuckoo: Boolean) = {
+      val snap = new Snapshot(
+        Files.createTempDirectory("graft-unseen").toString)(spark)
+      Crawler.crawl(pages, robots, seeds, dictLabels, maxRounds = 40,
+        roundMs = 4000L, snapshot = Some(snap), bloomPrefilter = true,
+        cuckooSeen = cuckoo,
+        cuckooParams = graft.seen.CuckooShard.Params(8, 1 << 9),
+        retainResults = false)(spark)
+      assertUnseenPerRound(snap, label)
+    }
+    snapshotCrawl("broadcast Bloom", cuckoo = false)
+    snapshotCrawl("cuckoo", cuckoo = true)
+    // one round per call: every call after the first resumes
+    val dir = Files.createTempDirectory("graft-stepped")
+    var (snap, state, _) = durable(1, dir)
+    while (snap.counters(snap.latest())("new_links") > 0L) {
+      val (sn, st, _) = durable(state.round + 1, dir)
+      assert(st.round === state.round + 1)
+      snap = sn; state = st
+    }
+    assertUnseenPerRound(snap, "resumed Bloom")
+    assert(finalState(snap) === finalState(drained._1))
+  }
+
+  test("both Recrawl paths keep every frontier distinct on url_hash and " +
+      "disjoint from its seen set") {
+    import spark.implicits._
+    val (state, results, _) = full
+    val params = graft.seen.CuckooShard.Params(8, 1 << 9)
+    val expired = results.filter(col("round") < 2).count()
+    for (cuckoo <- Seq(false, true)) {
+      // one recrawl round, then one round per call from its state; each
+      // state is checked before the next round consumes (and releases) it
+      var s = Recrawl.recrawl(pages, robots, dictLabels, state, results,
+        2, cuckoo, params, maxExtraRounds = 1)(spark)._1
+      assert(s.round === state.round + 1)
+      while ({
+        assertUnseen(s.frontier.toDF(), s.seenHashes,
+          s"recrawl, cuckoo=$cuckoo, round ${s.round}")
+        !s.frontier.isEmpty
+      }) s = Crawler.crawl(pages, robots, spark.emptyDataset[graft.model.Seed],
+        dictLabels, maxRounds = s.round + 1, startState = Some(s),
+        bloomPrefilter = cuckoo, cuckooSeen = cuckoo,
+        cuckooParams = params)(spark)._1
+      assert(s.totalFetched === state.totalFetched + expired)
+    }
+  }
+
+  test("repeated seeds, and seeds that canonicalize to the same url, " +
+      "crawl exactly like the plain seeds") {
+    import spark.implicits._
+    val (state, results, _) = full
+    val plain = seeds.collect().map(_.url).toSeq
+    val s0 = plain.head
+    val host = new java.net.URI(s0).getHost
+    val repeated = (plain ++ Seq(s0, s0, s"HTTPS://${host.toUpperCase}:443",
+      s"$s0#top")).map(graft.model.Seed(_)).toDS()
+    val (s2, r2, _) = Crawler.crawl(pages, robots, repeated, dictLabels,
+      maxRounds = 40, roundMs = 4000L)(spark)
+    assert(s2.totalFetched === state.totalFetched)
+    assert(r2.select("url_hash").distinct().count() === r2.count())
+    def schedule(r: Dataset[graft.model.CrawlResult]) =
+      r.select("url", "round", "depth").collect()
+        .map(x => (x.getString(0), x.getInt(1), x.getInt(2))).toSet
+    assert(schedule(r2) === schedule(results))
   }
 
   test("a Bloom snapshot's shards equal a build of its seen set after " +
@@ -407,7 +519,7 @@ class CrawlerSpec extends SparkSpec {
     val other = BloomShard.Params(8, 1 << 12, 5)
     val dir2 = Files.createTempDirectory("graft-layout")
     val (snap2, _, _) = durable(2, dir2)
-    durable(40, dir2, other)
+    durable(40, dir2, Some(other))
     assert(finalState(snap2) === want)
     assert(bits(snap2.read(snap2.latest(), "shards").as[SeenShard]) ===
       bits(BloomShard.build(snap2.read(snap2.latest(), "seen"), other)))

@@ -25,9 +25,8 @@ class SnapshotSpec extends SparkSpec {
       """quote"inside""" -> -3L,
       "bracket]name" -> 42L,
       "total_fetched" -> 9L)
-    snap.write(0, tables = Map("frontier" -> df),
-      counters = hostile,
-      appends = Map("results" -> df, "lineage" -> df))
+    snap.begin(0).replace("frontier", df)
+      .append("results", df).append("lineage", df).commit(hostile)
     assert(snap.counters(0) === hostile)
     assert(snap.appendPaths(0) ===
       Map("results" -> Seq(s"$base/round=0/results"),
@@ -42,10 +41,10 @@ class SnapshotSpec extends SparkSpec {
     val snap = new Snapshot(base)
     val d1 = spark.range(3).toDF("v")
     val d2 = spark.range(4).toDF("v").withColumn("v", col("v") + 100)
-    snap.write(0, tables = Map("seen" -> d1),
-      counters = Map("round_fetched" -> 3L), appends = Map("results" -> d1))
-    snap.write(1, tables = Map("seen" -> d2),
-      counters = Map("round_fetched" -> 4L), appends = Map("results" -> d2))
+    snap.begin(0).replace("seen", d1).append("results", d1)
+      .commit(Map("round_fetched" -> 3L))
+    snap.begin(1).replace("seen", d2).append("results", d2)
+      .commit(Map("round_fetched" -> 4L))
     assert(snap.latest() === 1)
     assert(snap.read(1, "results").count() === 7) // union of both slices
     assert(snap.readSlice(1, "results").count() === 4)
@@ -68,10 +67,8 @@ class SnapshotSpec extends SparkSpec {
         round, 2, "", "de", Nil, Nil, -1L, Nil, "de", 0)).toDS().toDF()
     val frontier = Seq(graft.model.FrontierEntry("https://a.edu/x", 5L,
       "a.edu", 1, new java.sql.Timestamp(1000L), 2, 0)).toDS().toDF()
-    snap.write(0, tables = Map("frontier" -> frontier),
-      counters = Map.empty, appends = Map("results" -> slice(0)))
-    snap.write(1, tables = Map("frontier" -> frontier),
-      counters = Map.empty, appends = Map("results" -> slice(1)))
+    (0 to 1).foreach(r => snap.begin(r).replace("frontier", frontier)
+      .append("results", slice(r)).commit(Map.empty))
     def same(got: org.apache.spark.sql.DataFrame, paths: String*) = {
       val want = spark.read.parquet(paths: _*)
       assert(got.schema === want.schema)

@@ -17,8 +17,13 @@ class FiltersSpec extends AnyFunSuite {
     val shards = BloomShard.build(seen).cache()
     val probe = (hashes(1500) ++ hashes(1500, "z")) // half seen, half new
       .zipWithIndex.toDF("url_hash", "rowid")
-    val viaBroadcast = BloomShard.filterUnseen(probe, shards)
-    val viaCogroup = BloomShard.filterUnseenCopartitioned(probe, shards)
+    // the rows each flag layout calls definitely unseen
+    def unflagged(flagged: org.apache.spark.sql.DataFrame) = flagged
+      .filter(!org.apache.spark.sql.functions.col(BloomShard.MaybeCol))
+      .drop(BloomShard.MaybeCol)
+    val viaBroadcast = unflagged(BloomShard.flagMaybeSeen(probe, shards))
+    val viaCogroup =
+      unflagged(BloomShard.flagMaybeSeenCopartitioned(probe, shards))
     assert(viaCogroup.columns.toSeq === viaBroadcast.columns.toSeq)
     assert(viaCogroup.exceptAll(viaBroadcast).isEmpty &&
       viaBroadcast.exceptAll(viaCogroup).isEmpty)
@@ -47,23 +52,18 @@ class FiltersSpec extends AnyFunSuite {
     val probe = (hashes(1000) ++ hashes(3000, "z")).zipWithIndex
       .toDF("url_hash", "rowid")
     val exact = probe.join(seen, Seq("url_hash"), "left_anti")
-    for (flagged <- Seq(
-        BloomShard.flagMaybeSeen(probe, shards, p),
-        BloomShard.flagMaybeSeenCopartitioned(probe, shards, p))) {
-      val defUnseen = flagged
-        .filter(!col(BloomShard.MaybeCol)).drop(BloomShard.MaybeCol)
-      val maybe = flagged
-        .filter(col(BloomShard.MaybeCol)).drop(BloomShard.MaybeCol)
-      val viaBloom = defUnseen.unionByName(
-        maybe.join(seen, Seq("url_hash"), "left_anti")
-          .select(defUnseen.columns.map(col): _*))
+    for (filter <- None +: Seq(false, true).map(c =>
+        Some(Seen.Filter(shards, p, copartitioned = c)))) {
+      val (viaBloom, flagged) = Seen.unseen(probe, seen, filter)
+      assert(viaBloom.columns.toSeq === probe.columns.toSeq)
       assert(viaBloom.exceptAll(exact).isEmpty &&
         exact.exceptAll(viaBloom).isEmpty)
+      flagged.foreach(graft.util.Checkpoints.release)
     }
     // and the saturation is real: filter-only WOULD have dropped rows
     // (the defect this spec pins against regressions)
-    assert(BloomShard.filterUnseen(probe, shards, p).count() <
-      exact.count())
+    assert(BloomShard.flagMaybeSeen(probe, shards, p)
+      .filter(!col(BloomShard.MaybeCol)).count() < exact.count())
     shards.unpersist()
   }
 
@@ -208,19 +208,12 @@ class FiltersSpec extends AnyFunSuite {
     val probe = (hashes(1000) ++ hashes(3000, "z")).zipWithIndex
       .toDF("url_hash", "rowid")
     val exact = probe.join(seen, Seq("url_hash"), "left_anti")
-    for (flagged <- Seq(
-        BloomShard.flagMaybeSeen(probe, shards, p.probeParams),
-        BloomShard.flagMaybeSeenCopartitioned(probe, shards,
-          p.probeParams))) {
-      val defUnseen = flagged
-        .filter(!col(BloomShard.MaybeCol)).drop(BloomShard.MaybeCol)
-      val maybe = flagged
-        .filter(col(BloomShard.MaybeCol)).drop(BloomShard.MaybeCol)
-      val viaCuckoo = defUnseen.unionByName(
-        maybe.join(seen, Seq("url_hash"), "left_anti")
-          .select(defUnseen.columns.map(col): _*))
+    for (copartitioned <- Seq(false, true)) {
+      val (viaCuckoo, flagged) = Seen.unseen(probe, seen,
+        Some(Seen.Filter(shards, p.probeParams, copartitioned)))
       assert(viaCuckoo.exceptAll(exact).isEmpty &&
         exact.exceptAll(viaCuckoo).isEmpty)
+      flagged.foreach(graft.util.Checkpoints.release)
     }
     // delete an "expired" half: survivors must ALL still flag maybe-seen
     // (no false negatives — the exact-equivalence guarantee), expired
