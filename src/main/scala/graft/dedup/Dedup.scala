@@ -364,16 +364,6 @@ object Dedup {
     labels.toDF("doc_id", "cluster_id")
   }
 
-  /** Keep one canonical doc per near-dup cluster: the min doc_id (the
-    * cluster label itself). Docs in no pair are their own canonical. */
-  def keepCanonical(docs: DataFrame, pairs: DataFrame)
-      (implicit spark: SparkSession): DataFrame = {
-    val losers = clusterPairs(pairs)
-      .filter(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id"))
-    docs.join(losers, Seq("doc_id"), "left_anti")
-  }
-
   /** Minhash near-dup clusters with canonical keeper per cluster
     * (rows-only driver check; exactness vs union-find is spec-tested). */
   val qDedupClusters: (SparkSession, String) => DataFrame = (s, dir) => {

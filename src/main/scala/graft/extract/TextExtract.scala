@@ -217,11 +217,9 @@ object TextExtract extends Serializable {
   }
 
   // ---- Column UDFs ----
-  val extractUdf = udf((b: Array[Byte]) => graft.Prof.time("extract")(extract(b)))
   val extractAllUdf = udf((b: Array[Byte]) =>
     graft.Prof.time("extract")(extractAll(b)))
 
-  def extractText(c: Column): Column = extractUdf(c)
   /** struct(_1 = text, _2 = links) in one parse. */
   def extractTextAndLinks(c: Column): Column = extractAllUdf(c)
 }

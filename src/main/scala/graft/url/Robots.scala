@@ -1,7 +1,6 @@
 package graft.url
 
 import java.util.Locale
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.model.RobotsRule
 
 /** robots.txt parser: raw bytes → the engine's per-host [[RobotsRule]]
@@ -99,15 +98,5 @@ object Robots {
       case ds => ds.max
     }
     RobotsRule(host, prefixes, delay)
-  }
-
-  /** Dataset surface: (host, body) rows → per-host rules — one map pass,
-    * no shuffle; the result is small (one row per host) and is broadcast
-    * by the gate that consumes it. */
-  def parseAll(robotsPages: DataFrame, agent: String = "*")
-      (implicit spark: SparkSession): Dataset[RobotsRule] = {
-    import spark.implicits._
-    robotsPages.select("host", "body").as[(String, String)]
-      .map { case (h, b) => parse(h, b, agent) }
   }
 }

@@ -494,6 +494,24 @@ class CrawlerSpec extends SparkSpec {
     }
   }
 
+  test("a crash after round 2's writes and before its manifest move (an " +
+      "orphan round dir, a stale manifest tmp) resumes to the same state") {
+    val want = finalState(drained._1)
+    val dir = Files.createTempDirectory("graft-crash")
+    val (snap, _, _) = durable(2, dir)
+    assert(snap.latest() === 1)
+    // the orphan round: parquet under every table a round writes, with
+    // rows no crawl makes, and the manifest written but not moved
+    val junk = spark.range(5).toDF("url_hash")
+    Seq("frontier", "seen", "shards", "results", "lineage").foreach(t =>
+      junk.write.parquet(dir.resolve(s"round=2/$t").toString))
+    Files.write(dir.resolve(".manifest_2.tmp"),
+      "{\"round\":2,\"tables\":{\"seen\":\"x\"}}".getBytes("UTF-8"))
+    assert(snap.latest() === 1)
+    durable(40, dir)
+    assert(finalState(snap) === want)
+  }
+
   test("a snapshot without its shards table (the former format), or " +
       "resumed under another shard layout, resumes to the same final state") {
     import com.fasterxml.jackson.databind.ObjectMapper

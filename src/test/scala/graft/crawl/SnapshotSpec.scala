@@ -6,7 +6,8 @@ import graft.SparkSpec
 /** Manifest round-trip properties the Jackson writer/reader must hold —
   * in particular under HOSTILE names (a counter named like a table, a
   * quote/bracket in a name), the class of inputs that silently corrupted
-  * the former string-built + regex-parsed manifest.
+  * the former string-built + regex-parsed manifest — and that a round
+  * whose write fails commits nothing.
   */
 class SnapshotSpec extends SparkSpec {
 
@@ -50,6 +51,34 @@ class SnapshotSpec extends SparkSpec {
     assert(snap.readSlice(1, "results").count() === 4)
     assert(snap.read(0, "results").count() === 3) // round-0 view unchanged
     assert(snap.counters(1) === Map("round_fetched" -> 4L))
+  }
+
+  test("a commit whose overlapped write fails throws and commits no " +
+      "manifest; the retried round commits") {
+    val base = tmpDir()
+    val snap = new Snapshot(base)
+    val good = spark.range(3).toDF("v")
+    snap.begin(0).replace("seen", good).append("results", good)
+      .commit(Map.empty)
+    // fails in the write's own job, on the write's thread
+    val failing = spark.range(0, 4, 1, 1).toDF("v")
+      .withColumn("v", when(col("v") >= 0, raise_error(lit("injected")))
+        .otherwise(col("v")))
+    val attempt = snap.begin(1).replace("seen", good)
+      .append("results", failing)
+    val e = intercept[Exception](attempt.commit(Map("round_fetched" -> 4L)))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected")), e)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$base/manifest_1.json")))
+    assert(snap.latest() === 0)
+    assert(snap.read(0, "results").count() === 3)
+    val retry = spark.range(4).toDF("v").withColumn("v", col("v") + 100)
+    snap.begin(1).replace("seen", good).append("results", retry)
+      .commit(Map("round_fetched" -> 4L))
+    assert(snap.latest() === 1)
+    assert(snap.read(1, "results").count() === 7)
+    assert(snap.readSlice(1, "results").count() === 4)
   }
 
   test("read/readSlice launch no Spark job and match an inferring read " +

@@ -150,8 +150,7 @@ class DedupSpec extends SparkSpec {
     assert(clusters(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).isEmpty)
   }
 
-  test("clusterPairs ≡ brute-force union-find; keepCanonical keeps " +
-      "exactly min-id per cluster plus all unpaired docs") {
+  test("clusterPairs ≡ brute-force union-find: chain, pair, triangle, edge") {
     import spark.implicits._
     // chain 1-2-3, pair (10,11), triangle 20-21-22, singleton edge (30,31)
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L),
@@ -159,15 +158,6 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_a", "doc_b")
     val got = clusters(pairs)
     assert(got === unionFind(pairs.as[(Long, Long)].collect().toSeq))
-    // canonical keeper: min per cluster survives, losers dropped,
-    // unpaired docs untouched
-    val docs = (1L to 40L).toDF("doc_id")
-    val kept = Dedup.keepCanonical(docs, pairs)(spark)
-      .as[Long].collect().toSet
-    assert(!kept.contains(2L) && !kept.contains(3L) && kept.contains(1L))
-    assert(!kept.contains(21L) && !kept.contains(22L) && kept.contains(20L))
-    assert(kept.contains(30L) && !kept.contains(31L))
-    assert(kept.contains(15L) && kept.contains(40L)) // unpaired
   }
 
   test("exact dedup groups by content hash with min-id keeper") {

@@ -8,8 +8,7 @@ class FiltersSpec extends AnyFunSuite {
   private def hashes(n: Int, salt: String = ""): Seq[Long] =
     (0 until n).map(i => Canonical.hash64(s"https://u$salt$i.edu/p$i"))
 
-  test("bloom: co-partitioned filterUnseen ≡ broadcast filterUnseen, " +
-      "via cogroup (no driver collect of shards)") {
+  test("bloom: co-partitioned ≡ broadcast flagMaybeSeen, via cogroup") {
     implicit val spark: org.apache.spark.sql.SparkSession =
       graft.SparkSpec.session
     import spark.implicits._

@@ -69,29 +69,6 @@ class SourcesSpec extends SparkSpec {
     assert(oneShot === out)
   }
 
-  test("university domain-suffix resolution: equals or dot-suffix only, " +
-      "longest domain wins, unmatched is null") {
-    import spark.implicits._
-    val unis = Seq(
-      ("University of Groningen", Seq("rug.nl")),
-      ("Aristotle University", Seq("auth.gr")),
-      ("CS Dept Groningen", Seq("cs.rug.nl")),
-      ("Generic NL", Seq("nl"))).toDF("name", "domains")
-    val pages = Seq(
-      "https://www.cs.rug.nl/course/1",  // longest match = cs.rug.nl
-      "https://rug.nl/",                  // exact domain match
-      "https://notrug.nl/x",              // substring must NOT match rug.nl
-      "https://www.auth.gr/a",
-      "https://unknown.example/").toDF("url")
-    val got = Universities.resolveByDomain(pages, "url", unis)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got("https://www.cs.rug.nl/course/1") === "CS Dept Groningen")
-    assert(got("https://rug.nl/") === "University of Groningen")
-    assert(got("https://notrug.nl/x") === "Generic NL") // only ".nl" suffix
-    assert(got("https://www.auth.gr/a") === "Aristotle University")
-    assert(got("https://unknown.example/") === null)
-  }
-
   test("countryOfHost: TLD map in order, special cases, Unknown") {
     import spark.implicits._
     val got = Seq("www.rug.nl", "uni-bonn.example", "portal.auth.gr.example",

@@ -95,17 +95,4 @@ class RobotsSpec extends AnyFunSuite {
     assert(r.crawl_delay_ms === Int.MaxValue,
       s"4294968 s must clamp, got ${r.crawl_delay_ms}")
   }
-
-  test("parseAll over a (host, body) table ≡ per-host parse") {
-    implicit val spark: org.apache.spark.sql.SparkSession =
-      graft.SparkSpec.session
-    import spark.implicits._
-    val rows = (0 until 12).map(h =>
-      (graft.corpus.Synth.host(h), graft.corpus.Synth.robotsTxt(h)))
-    val parsed = Robots.parseAll(rows.toDF("host", "body"))
-      .collect().sortBy(_.host)
-    val direct = rows.map { case (h, b) => Robots.parse(h, b) }
-      .sortBy(_.host)
-    assert(parsed.toSeq === direct)
-  }
 }
